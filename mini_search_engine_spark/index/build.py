@@ -73,12 +73,17 @@ class InvertedIndex:
     # immutable): repeated query terms skip the termstats-lookup job, one
     # fewer stage wave per repeated-term query. 0 = negative-cached absent.
     df_cache: dict | None = None
+    # session temp view over warm()'s serving layout — the postings frame
+    # itself, df stamped in. Only warm() sets it; every derivation that
+    # replaces postings or termstats must reset it to None.
+    serving_view: str | None = None
 
     def unpersist(self, corpus: bool = True) -> None:
         """Release EVERY cache this index owns: build-side persists
-        (postings + token frame), the serving-mode pins ``warm()`` takes
-        on doclens/termstats, and (``corpus=True``) the corpus exchange
-        cache ``assign_docids`` attached to the input docs. Needed when
+        (postings + token frame), the serving layout, view and pins
+        ``warm()`` takes on doclens/termstats, and (``corpus=True``) the
+        corpus exchange cache ``assign_docids`` attached to the input
+        docs. Needed when
         building repeatedly in one session (Spark's cache manager matches
         by logical plan, so a later identical build would silently reuse
         this build's cache) and when retiring a warm serving index
@@ -97,6 +102,8 @@ class InvertedIndex:
         for df in (self.doclens, self.termstats):
             if df is not None and df.is_cached:
                 df.unpersist()
+        if self.serving_view is not None:
+            self.postings.sparkSession.catalog.dropTempView(self.serving_view)
 
     def decoded(self) -> "InvertedIndex":
         """Return a view with docids/tfs decoded from the codec columns."""
@@ -118,32 +125,93 @@ class InvertedIndex:
         return replace(self, postings=p, compressed=False)
 
     def warm(self) -> "InvertedIndex":
-        """Serving mode: decode the codec columns ONCE and pin the decoded
-        postings (plus doclens/termstats) in the cache, so every query is
-        pure JVM work — no per-query codec UDF round trip. This is the
-        memory/latency trade a serving cluster makes; batch pipelines keep
-        the compressed form and decode per scan. The returned index OWNS
-        the caches (release via ``.unpersist()``)."""
+        """Serving mode: pin a document-partitioned serving layout, so every
+        query is ONE Spark job of pure JVM work.
+
+        The layout is the decoded postings (codec UDF run once) with each
+        term's GLOBAL df from ``termstats`` stamped onto its rows,
+        range-partitioned by ``block`` and sorted by ``(tid, block)``
+        within partitions. Blocks are docid ranges aligned across terms
+        and a cached relation keeps its ``RangePartitioning(block)``
+        through filter, explode and aggregate, so the queries in
+        ``search/`` — grouped and ordered on ``(block, docid)``, idf read
+        from the ``df`` column — plan with no exchange. The tid sort lets
+        the in-memory columnar cache skip batches whose tid range misses
+        the query's ``tid IN`` predicate.
+
+        The layout is registered as a session temp view (``serving_view``)
+        so a query is one ``spark.sql`` text with inline numeric
+        literals. doclens and termstats are pinned too, and ``df_cache``
+        starts empty: it memoizes the termstats probe for the scorers
+        that still take df as a driver-side literal (the pruned BM25
+        gate, batch BM25, LTR features). The returned index OWNS the
+        caches and the view (release via ``.unpersist()``)."""
+        import uuid
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+
         idx = self.decoded()
-        # Partition-local sort by tid BEFORE pinning: Spark's in-memory
-        # columnar cache keeps min/max stats per ~10k-row batch and skips
-        # batches whose range excludes the query predicate
-        # (inMemoryColumnarStorage.partitionPruning). Fused-build output is
-        # ordered by partition-LOCAL stem id — tid is effectively random in
-        # it, every batch spans the whole 60-bit keyspace, and a query
-        # scans the entire cache; sorted, a Q-term query touches ~Q batches
-        # per partition. One-time narrow cost at warm time (no exchange).
-        # Measured A/B at 1.2M docs, local[32]: hot-term BM25 1.02-1.17 s →
-        # 0.85-0.94 s (~15-20%); selective queries are flat because latency
-        # there is the per-stage-wave scheduling floor (~0.25 s), not scan
-        # bytes — the skip fraction grows with cache size, so the win does.
-        idx = replace(
-            idx, postings=idx.postings.sortWithinPartitions("tid", "block")
+        dec = idx.postings.drop("df")
+        if self.compressed:
+            # decode into a temporary cache: a range exchange directly above
+            # the decode UDF would run it twice (once for the range
+            # sampler), and one below it loses the partitioning. The
+            # sampler's pass fills the cache; the exchange then reads it.
+            dec = dec.persist()
+        layout = (
+            dec.join(F.broadcast(idx.termstats.select("tid", "df")), "tid")
+            .repartitionByRange("block")
+            .sortWithinPartitions("tid", "block")
+            .persist()
         )
-        idx.postings.persist().count()
-        idx.doclens.persist().count()
-        idx.termstats.persist().count()
-        return replace(idx, df_cache={})
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            # the sidecar pins are independent small jobs: run them beside
+            # the layout's (measured ~0.15 s of a ~1.7 s warm at 1,500 docs)
+            pins = pool.submit(
+                inheritable_thread_target(idx.postings.sparkSession)(
+                    lambda: (idx.doclens.persist().count(), idx.termstats.persist().count())
+                )
+            )
+            layout.count()
+            pins.result()
+        if self.compressed:
+            dec.unpersist()
+        view = f"warm_postings_{uuid.uuid4().hex}"
+        layout.createOrReplaceTempView(view)
+        return replace(idx, postings=layout, df_cache={}, serving_view=view)
+
+    def query(
+        self, sql: str, tids: list[int], df: dict[int, int] | None = None, **params: str
+    ) -> DataFrame:
+        """Run ``sql``, a SELECT over the relation ``{postings}`` that keeps
+        only ``WHERE tid IN {tids}``, on this index's decoded postings;
+        ``params`` fill the template's other fields.
+
+        On a warm index ``{postings}`` is the serving view and the query
+        is one ``spark.sql`` call. Keep the view as the FROM of the query
+        block that orders by ``(block, docid)``: a subquery re-qualifies
+        ``block`` and the planner no longer matches it to the cached
+        range partitioning. Any other index substitutes its tid-filtered,
+        decoded postings, with ``df`` (tid → df from the termstats probe)
+        folded in as a literal ``CASE`` column when given: the same plan
+        at the cost of a non-warm scan. Only numbers reach the SQL text:
+        term ids are hashed on the driver."""
+        spark = self.postings.sparkSession
+        in_list = f"({', '.join(f'{int(t)}L' for t in tids)})"
+        if self.serving_view is not None:
+            # args={}: an empty parameter map skips pyspark's conversion of
+            # the default positional-args list (three Py4J round trips)
+            text = sql.format(postings=self.serving_view, tids=in_list, **params)
+            return spark.sql(text, args={})
+        p = self.postings.filter(f"tid IN {in_list}")
+        p = replace(self, postings=p).decoded().postings
+        if df is not None:
+            arms = " ".join(f"WHEN {int(t)}L THEN {int(d)}L" for t, d in df.items())
+            p = p.withColumn("df", F.expr(f"CASE tid {arms} END"))
+        # pyspark binds the DataFrame to a temporary view for this call only
+        text = sql.format(postings="{postings}", tids=in_list, **params)
+        return spark.sql(text, postings=p)
 
 
 def tokenize_docs(
@@ -1168,87 +1236,87 @@ def build_index(
         _total_fut = _total_pool.submit(
             lambda: doclens.agg(F.sum(F.col("dl").cast("long"))).collect()[0][0] or 0
         )
-    tf = tokenize_docs(docs, analyzer=analyzer, positional=positional).withColumn(
-        "tid", term_id_col(F.col("term"))
-    )
-    # persist only when a second consumer exists (collision check, or the
-    # tf-derived doclens of non-native analyzers): with a single consumer
-    # (the postings aggregation) the cache write is pure overhead (r6).
-    tf_multi = check_tid_collisions or not native
-    if tf_multi:
-        tf = tf.persist()
-
-    if local_blocks:
-        # shuffle-free path for NON-porter analyzers: partition-local
-        # sorted Arrow aggregation over docid-range input partitions — see
-        # _blocked_postings_arrow. (Measured NOT faster than the hash-agg
-        # below when the exchange is needed anyway: sorting 1M raw rows per
-        # partition by the term string costs more than hash aggregation.)
-        postings = _blocked_postings_arrow(
-            tf, block_span, compress, local=True, positional=positional
-        )
-    else:
-        # exchange path: Catalyst hash aggregation — collect per-group
-        # struct arrays, sort each group's array (ints within a group,
-        # cheaper than sorting raw rows by string term), then the batch
-        # codec UDF. Grouping keys are (tid, block) ints; min(term) rides
-        # along only to seed the termstats dictionary (map-side partial
-        # agg collapses it to one string per group before the exchange).
-        blocked = tf.withColumn("block", (F.col("docid") / block_span).cast("long"))
-        plist_fields = [F.col("docid"), F.col("tf"), F.col("dl")]
-        if positional:
-            plist_fields.append(F.col("positions"))
-        plist = F.sort_array(F.collect_list(F.struct(*plist_fields)))
-        agg = blocked.groupBy("tid", "block").agg(
-            F.min("term").alias("term"),
-            plist.alias("plist"),
-            F.count("*").cast("int").alias("n"),
-            F.min("docid").alias("min_docid"),
-            F.max("docid").alias("max_docid"),
-            F.max("tf").alias("max_tf"),
-            F.min("dl").alias("min_dl"),
-        )
-        cols = [
-            "tid",
-            "term",
-            "block",
-            "n",
-            F.transform("plist", lambda x: x["docid"]).alias("docids"),
-            F.transform("plist", lambda x: x["tf"]).alias("tfs"),
-            F.transform("plist", lambda x: x["dl"]).alias("dls"),
-            "min_docid",
-            "max_docid",
-            "max_tf",
-            "min_dl",
-        ]
-        if positional:
-            cols.insert(7, F.transform("plist", lambda x: x["positions"]).alias("positions"))
-        postings = agg.select(*cols)
-        if compress:
-            # C4: position lists delta-varint encoded; tf array recovers
-            # the per-posting list boundaries at decode time. One
-            # mapInArrow pass over the ListArray buffers — no per-posting
-            # Python objects (see compress.encode_blocks_arrow).
-            postings = C.encode_blocks_arrow(postings, positional)
-    full = postings.persist()
-
-    # doclens: for analyzers with a native tokenizer the doc length is a
-    # pure-Catalyst narrow scan (stemming is 1:1 so 'porter' dl == native
-    # token count) — measured ~4× cheaper than deriving it from tf, whose
-    # groupBy(docid) shuffles every posting row and whose left join added a
-    # second (flat, non-scaling) job to every index write. Non-native
-    # analyzers fall back to the tf derivation. total_tokens comes from
-    # the doclens scan, NOT a tf aggregation (Σ tf ≡ Σ dl — the same 1:1
-    # invariant the fused path and doclens itself already rely on), and
-    # for native analyzers the job was submitted on a driver thread above.
-    if not native:
-        dl_nonzero = tf.groupBy("docid").agg(F.max("dl").alias("dl"))
-        doclens = (
-            docs.select("docid").join(dl_nonzero, "docid", "left").na.fill(0, ["dl"])
-        )
-        total_tokens = tf.agg(F.sum(F.col("tf").cast("long"))).collect()[0][0] or 0
-
     try:
+        tf = tokenize_docs(docs, analyzer=analyzer, positional=positional).withColumn(
+            "tid", term_id_col(F.col("term"))
+        )
+        # persist only when a second consumer exists (collision check, or the
+        # tf-derived doclens of non-native analyzers): with a single consumer
+        # (the postings aggregation) the cache write is pure overhead (r6).
+        tf_multi = check_tid_collisions or not native
+        if tf_multi:
+            tf = tf.persist()
+
+        if local_blocks:
+            # shuffle-free path for NON-porter analyzers: partition-local
+            # sorted Arrow aggregation over docid-range input partitions — see
+            # _blocked_postings_arrow. (Measured NOT faster than the hash-agg
+            # below when the exchange is needed anyway: sorting 1M raw rows per
+            # partition by the term string costs more than hash aggregation.)
+            postings = _blocked_postings_arrow(
+                tf, block_span, compress, local=True, positional=positional
+            )
+        else:
+            # exchange path: Catalyst hash aggregation — collect per-group
+            # struct arrays, sort each group's array (ints within a group,
+            # cheaper than sorting raw rows by string term), then the batch
+            # codec UDF. Grouping keys are (tid, block) ints; min(term) rides
+            # along only to seed the termstats dictionary (map-side partial
+            # agg collapses it to one string per group before the exchange).
+            blocked = tf.withColumn("block", (F.col("docid") / block_span).cast("long"))
+            plist_fields = [F.col("docid"), F.col("tf"), F.col("dl")]
+            if positional:
+                plist_fields.append(F.col("positions"))
+            plist = F.sort_array(F.collect_list(F.struct(*plist_fields)))
+            agg = blocked.groupBy("tid", "block").agg(
+                F.min("term").alias("term"),
+                plist.alias("plist"),
+                F.count("*").cast("int").alias("n"),
+                F.min("docid").alias("min_docid"),
+                F.max("docid").alias("max_docid"),
+                F.max("tf").alias("max_tf"),
+                F.min("dl").alias("min_dl"),
+            )
+            cols = [
+                "tid",
+                "term",
+                "block",
+                "n",
+                F.transform("plist", lambda x: x["docid"]).alias("docids"),
+                F.transform("plist", lambda x: x["tf"]).alias("tfs"),
+                F.transform("plist", lambda x: x["dl"]).alias("dls"),
+                "min_docid",
+                "max_docid",
+                "max_tf",
+                "min_dl",
+            ]
+            if positional:
+                cols.insert(7, F.transform("plist", lambda x: x["positions"]).alias("positions"))
+            postings = agg.select(*cols)
+            if compress:
+                # C4: position lists delta-varint encoded; tf array recovers
+                # the per-posting list boundaries at decode time. One
+                # mapInArrow pass over the ListArray buffers — no per-posting
+                # Python objects (see compress.encode_blocks_arrow).
+                postings = C.encode_blocks_arrow(postings, positional)
+        full = postings.persist()
+
+        # doclens: for analyzers with a native tokenizer the doc length is a
+        # pure-Catalyst narrow scan (stemming is 1:1 so 'porter' dl == native
+        # token count) — measured ~4× cheaper than deriving it from tf, whose
+        # groupBy(docid) shuffles every posting row and whose left join added a
+        # second (flat, non-scaling) job to every index write. Non-native
+        # analyzers fall back to the tf derivation. total_tokens comes from
+        # the doclens scan, NOT a tf aggregation (Σ tf ≡ Σ dl — the same 1:1
+        # invariant the fused path and doclens itself already rely on), and
+        # for native analyzers the job was submitted on a driver thread above.
+        if not native:
+            dl_nonzero = tf.groupBy("docid").agg(F.max("dl").alias("dl"))
+            doclens = (
+                docs.select("docid").join(dl_nonzero, "docid", "left").na.fill(0, ["dl"])
+            )
+            total_tokens = tf.agg(F.sum(F.col("tf").cast("long"))).collect()[0][0] or 0
+
         if check_tid_collisions:
             # on the token frame, not the (tid, block)-aggregated postings: a
             # same-block collision would be collapsed by that agg's min(term).
@@ -1330,7 +1398,9 @@ def write_index(index: InvertedIndex, path: str, mode: str = "overwrite") -> Non
 
     def _w_postings():
         (
-            index.postings.sortWithinPartitions("tid", "block")
+            # a warm index's stamped df is serving state, not index data
+            index.postings.drop("df")
+            .sortWithinPartitions("tid", "block")
             .write.mode(mode)
             .parquet(f"{path}/postings")
         )

@@ -178,6 +178,7 @@ def refresh_champion(
             tf=None,
             build_cache=None,
             df_cache=None,
+            serving_view=None,
             pruned=True,
         )
     else:

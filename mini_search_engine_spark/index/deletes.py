@@ -66,7 +66,9 @@ def apply_deletes(index: InvertedIndex, tombstones: DataFrame) -> InvertedIndex:
     block_ids = [r["block"] for r in tomb_blocks.select("block").limit(MAX_INLINE_BLOCKS + 1).collect()]
     inline = len(block_ids) <= MAX_INLINE_BLOCKS
 
-    p = index.postings
+    # a warm index's stamped df would go stale: drop it, and its serving
+    # view below; the result takes df from the rewritten termstats
+    p = index.postings.drop("df")
     positional = "positions" in p.columns
     joined = p.join(F.broadcast(tomb_blocks), "block", "left")
     mask = F.transform(F.col("docids"), lambda d: ~F.array_contains(F.col("_tomb"), d))
@@ -152,4 +154,5 @@ def apply_deletes(index: InvertedIndex, tombstones: DataFrame) -> InvertedIndex:
         build_cache=None,
         corpus_cache=index.corpus_cache,
         df_cache=None,
+        serving_view=None,
     )

@@ -25,9 +25,11 @@ hot-term count (df_part > hot_term_threshold).
 from __future__ import annotations
 
 import json
+import logging
 import math
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,11 +45,19 @@ def _lineage_path(path: str) -> str:
     return f"{path}/lineage"
 
 
+log = logging.getLogger(__name__)
+
+# a build that has not committed a part yet: no lineage dir, or an empty one
+_NO_LINEAGE = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def read_lineage(spark: SparkSession, path: str) -> DataFrame | None:
     try:
         df = spark.read.option("recursiveFileLookup", "true").json(_lineage_path(path))
         return df if "pid" in df.columns else None
-    except Exception:
+    except Exception as exc:
+        if not (isinstance(exc, AnalysisException) and exc.getCondition() in _NO_LINEAGE):
+            log.warning("unreadable lineage at %s, treating it as empty", path, exc_info=True)
         return None
 
 

@@ -170,7 +170,10 @@ def delete_terms(index: InvertedIndex, keywords: list[str]) -> InvertedIndex:
     from mini_search_engine_spark.index.termid import term_ids
 
     tids = term_ids(terms)
-    postings = index.postings.filter(~F.col("tid").isin(tids))
+    postings = index.postings.drop("df").filter(~F.col("tid").isin(tids))
     termstats = index.termstats.filter(~F.col("tid").isin(tids))
-    # drop any warm-mode df memo: deleted terms must not resolve from it
-    return replace(index, postings=postings, termstats=termstats, df_cache=None)
+    # drop any warm-mode df memo, stamped df and serving view: deleted
+    # terms must not resolve from them
+    return replace(
+        index, postings=postings, termstats=termstats, df_cache=None, serving_view=None
+    )

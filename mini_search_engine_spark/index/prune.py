@@ -92,9 +92,9 @@ def champion_index(index: InvertedIndex, n_per_term: int = 128) -> InvertedIndex
         tf=None,
         build_cache=None,
         df_cache=None,
-        # Champion postings are capped at n_per_term per term: df recovered
-        # from them (e.g. the fused-cold sum(n)-window) would be the PRUNED
-        # df and inflate idf. This flag routes scoring to the global
-        # termstats probe path instead (ranking.bm25_topk).
+        serving_view=None,
+        # Champion postings are capped at n_per_term per term, so df must
+        # never be recovered from them: scoring reads the global termstats
+        # df (stamped by warm(), probed otherwise).
         pruned=True,
     )

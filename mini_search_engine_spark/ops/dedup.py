@@ -319,10 +319,13 @@ def minhash_candidate_pairs(
             F.slice("_keys", 1, F.col("band")).alias("prefix"),
         )
     )
+    # collect_set + the docid_a < docid_b guard below: an input row
+    # repeated under one docid collapses to one bucket entry and never
+    # pairs with itself
     buckets = (
         keyed.groupBy("band", "band_key")
         .agg(
-            F.sort_array(F.collect_list(F.struct("docid", "prefix"))).alias("ids")
+            F.sort_array(F.collect_set(F.struct("docid", "prefix"))).alias("ids")
         )
         .filter(F.size("ids") > 1)
     )
@@ -334,7 +337,8 @@ def minhash_candidate_pairs(
                     lambda x, i: F.transform(
                         F.filter(
                             F.slice(F.col("ids"), i + 2, F.size("ids")),
-                            lambda y: ~F.exists(
+                            lambda y: (x["docid"] < y["docid"])
+                            & ~F.exists(
                                 F.zip_with(
                                     x["prefix"],
                                     y["prefix"],

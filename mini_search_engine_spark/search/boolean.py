@@ -51,16 +51,33 @@ def _postings_for(index: InvertedIndex, terms: list[str]) -> DataFrame:
     return replace(index, postings=filtered).decoded().postings
 
 
+# Every operator keys its groups and its order on (block, docid): blocks are
+# docid ranges aligned across terms, so on a warm index's block-range
+# layout neither needs an exchange and the query is one Spark job.
+_DOCIDS_SQL = """SELECT docid FROM {postings}
+LATERAL VIEW explode(docids) e AS docid
+WHERE tid IN {tids}{group}
+ORDER BY block, docid"""
+
+# positional operators: one map tid → positions per (block, docid), and a
+# predicate over those maps — no per-term self-join
+_POSITIONS_SQL = """SELECT docid FROM {postings}
+LATERAL VIEW inline(arrays_zip(docids, positions)) z AS docid, pos
+WHERE tid IN {tids}
+GROUP BY block, docid HAVING {having}
+ORDER BY block, docid"""
+_POS_MAP = "map_from_entries(collect_list(struct(tid, pos)))"
+
+
+def _docids(index: InvertedIndex, terms: list[str], group: str = "") -> DataFrame:
+    return index.query(_DOCIDS_SQL, term_ids(terms), group=group)
+
+
 def search_keyword(index: InvertedIndex, keyword: str) -> DataFrame:
     toks = analyze_query(keyword, index.analyzer)
     if not toks:
         return _empty_docids(index)
-    t = toks[0]
-    return (
-        _postings_for(index, [t])
-        .select(F.explode("docids").alias("docid"))
-        .orderBy("docid")
-    )
+    return _docids(index, toks[:1])
 
 
 def search_and(index: InvertedIndex, keywords: list[str]) -> DataFrame:
@@ -68,36 +85,16 @@ def search_and(index: InvertedIndex, keywords: list[str]) -> DataFrame:
     if any(not tl for tl in term_lists):
         return _empty_docids(index)  # reference `:941-945`
     terms = sorted({t for tl in term_lists for t in tl})
-    # conjunct coverage as a bit_or over a driver-assigned bit per term id:
-    # count_distinct(tid) planned as TWO exchanges (distinct on (docid,
-    # tid), then the per-docid count); the bit mask is a plain aggregate
-    # with map-side partials — ONE exchange, same docid set (r6). The
-    # query term count is tiny, so the chained-CASE bit literal matches
-    # the BM25 weight-literal convention.
+    # conjunct coverage as a bit_or over a driver-assigned bit per term id
+    # (a plain aggregate with map-side partials; count(DISTINCT tid) plans
+    # two); huge conjunctions overflow the long mask and count instead
     tids = term_ids(terms)
-    if len(tids) > 63:  # bit mask is a long; huge conjunctions take the
-        return (  # two-exchange count_distinct path (correct at any arity)
-            _postings_for(index, terms)
-            .select("tid", F.explode("docids").alias("docid"))
-            .groupBy("docid")
-            .agg(F.count_distinct("tid").alias("nt"))
-            .filter(F.col("nt") == len(tids))
-            .select("docid")
-            .orderBy("docid")
-        )
-    bit = F.lit(0)
-    for i, tid in enumerate(tids):
-        bit = F.when(F.col("tid") == F.lit(tid), F.lit(1 << i)).otherwise(bit)
-    full = (1 << len(tids)) - 1
-    return (
-        _postings_for(index, terms)
-        .select(bit.alias("_bit"), F.explode("docids").alias("docid"))
-        .groupBy("docid")
-        .agg(F.bit_or("_bit").alias("_m"))
-        .filter(F.col("_m") == full)
-        .select("docid")
-        .orderBy("docid")
-    )
+    if len(tids) > 63:
+        having = f"count(DISTINCT tid) = {len(tids)}"
+    else:
+        arms = " ".join(f"WHEN {tid}L THEN {1 << i}L" for i, tid in enumerate(tids))
+        having = f"bit_or(CASE tid {arms} END) = {(1 << len(tids)) - 1}L"
+    return _docids(index, terms, f"\nGROUP BY block, docid HAVING {having}")
 
 
 def search_and_segments(
@@ -171,12 +168,7 @@ def search_or(index: InvertedIndex, keywords: list[str]) -> DataFrame:
     terms = sorted({t for k in keywords for t in analyze_query(k, index.analyzer)})
     if not terms:
         return _empty_docids(index)
-    return (
-        _postings_for(index, terms)
-        .select(F.explode("docids").alias("docid"))
-        .distinct()
-        .orderBy("docid")
-    )
+    return _docids(index, terms, "\nGROUP BY block, docid")
 
 
 def _positional_chain(
@@ -184,9 +176,12 @@ def _positional_chain(
 ) -> DataFrame:
     """Shared machinery for phrase (slop=1) and ordered-proximity search:
     docs where the analyzed tokens appear in order with every consecutive
-    gap ≤ ``slop`` positions. The survivor fold stays pure Catalyst array
-    ops — for slop=1 it is the reference's adjacency fold verbatim; for
-    slop>1 each step is the union of the ``slop`` shifted intersections."""
+    gap ≤ ``slop`` positions. The survivor fold is pure Catalyst array ops
+    over the per-doc position map: for slop=1 it is the reference's
+    adjacency fold verbatim, ``surv_k = array_intersect(transform(surv_{k-1},
+    p→p+1), positions_k)``; for slop>1 each step shifts by every gap in
+    1..slop at once. A doc missing a term has a null map entry, so its
+    survivors are null and it drops out."""
     if not index.positional:
         raise NotImplementedError(
             "phrase search requires a positional index"  # reference `:1107-1108`
@@ -200,41 +195,15 @@ def _positional_chain(
     if len(terms) == 1:
         return search_keyword(index, terms[0])
 
-    posts = _postings_for(index, sorted(set(terms)))
-    # per-(tid, docid) positions — one exploded frame, reused per phrase slot
-    tp = posts.select(
-        "tid",
-        F.explode(F.arrays_zip("docids", "positions")).alias("z"),
-    ).select("tid", F.col("z.docids").alias("docid"), F.col("z.positions").alias("pos"))
-
-    joined: DataFrame | None = None
-    for i, t in enumerate(terms):
-        cur = tp.filter(F.col("tid") == term_ids([t])[0]).select(
-            F.col("docid"), F.col("pos").alias(f"pos_{i}")
-        )
-        joined = cur if joined is None else joined.join(cur, "docid")
-
-    def _shifted_intersect(surv, d: int, pos_col):
-        # NB the closure must expose a ONE-argument lambda: pyspark's
-        # ``transform`` inspects arity, and a second (default) parameter
-        # would be bound to the array index
-        return F.array_intersect(F.transform(surv, lambda p: p + d), pos_col)
-
-    surv = F.col("pos_0")
-    for i in range(1, len(terms)):
-        shifted = [
-            _shifted_intersect(surv, d, F.col(f"pos_{i}"))
-            for d in range(1, slop + 1)
-        ]
-        surv = shifted[0] if len(shifted) == 1 else F.array_distinct(
-            F.concat(*shifted)
-        )
-    return (
-        joined.withColumn("surv", surv)
-        .filter(F.size("surv") > 0)
-        .select("docid")
-        .orderBy("docid")
-    )
+    tids = term_ids(terms)
+    shift = "p -> p + 1" if slop == 1 else f"p -> sequence(p + 1, p + {slop})"
+    surv = f"{_POS_MAP}[{tids[0]}L]"
+    for tid in tids[1:]:
+        shifted = f"transform({surv}, {shift})"
+        if slop > 1:
+            shifted = f"flatten({shifted})"
+        surv = f"array_intersect({shifted}, {_POS_MAP}[{tid}L])"
+    return index.query(_POSITIONS_SQL, sorted(set(tids)), having=f"size({surv}) > 0")
 
 
 def search_phrase(index: InvertedIndex, phrase: str | list[str]) -> DataFrame:
@@ -264,11 +233,11 @@ def search_window(
     Exact predicate, pure Catalyst: a qualifying span exists iff some
     anchor position ``p`` (WLOG the span's minimum — so an occurrence of
     one of the terms) has every term occurring in ``[p, p + window - 1]``.
-    After the same per-term positions join the phrase chain uses, that is
-    one nested ``exists(anchor, p -> AND_i exists(pos_i, q -> p ≤ q <
-    p + window))`` over per-doc position arrays — no positional self-join,
-    no explode; per-doc cost O(Σ|pos| · m) on arrays already in memory.
-    ``window = len(terms)`` is the unordered-phrase special case."""
+    Over the per-doc position map the phrase chain uses, that is one
+    nested ``exists(anchor, p -> forall(terms, exists(pos, q -> p ≤ q <
+    p + window)))`` — no positional self-join; per-doc cost O(Σ|pos| · m)
+    on arrays already in memory. ``window = len(terms)`` is the
+    unordered-phrase special case."""
     terms = sorted({t for k in keywords for t in analyze_query(k, index.analyzer)})
     if not index.positional:
         raise NotImplementedError("window search requires a positional index")
@@ -279,35 +248,9 @@ def search_window(
     if len(terms) == 1:
         return search_keyword(index, terms[0])
 
-    posts = _postings_for(index, terms)
-    tp = posts.select(
-        "tid",
-        F.explode(F.arrays_zip("docids", "positions")).alias("z"),
-    ).select("tid", F.col("z.docids").alias("docid"), F.col("z.positions").alias("pos"))
-
-    joined: DataFrame | None = None
-    from mini_search_engine_spark.index.termid import term_ids as _tids
-
-    for i, t in enumerate(terms):
-        cur = tp.filter(F.col("tid") == _tids([t])[0]).select(
-            F.col("docid"), F.col("pos").alias(f"pos_{i}")
-        )
-        joined = cur if joined is None else joined.join(cur, "docid")
-
-    anchors = F.col("pos_0")
-    for i in range(1, len(terms)):
-        anchors = F.concat(anchors, F.col(f"pos_{i}"))
-
-    def _all_in_span(p):
-        cond = F.lit(True)
-        for i in range(len(terms)):
-            cond = cond & F.exists(
-                F.col(f"pos_{i}"), lambda q: (q >= p) & (q < p + window)
-            )
-        return cond
-
-    return (
-        joined.filter(F.exists(anchors, _all_in_span))
-        .select("docid")
-        .orderBy("docid")
+    pos = f"map_values({_POS_MAP})"
+    having = (
+        f"size({_POS_MAP}) = {len(terms)} AND exists(flatten({pos}), p -> "
+        f"forall({pos}, ps -> exists(ps, q -> q >= p AND q < p + {int(window)})))"
     )
+    return index.query(_POSITIONS_SQL, term_ids(terms), having=having)

@@ -18,10 +18,14 @@ otherwise build a 100-deep plan).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DAMPING = 0.85
+
+log = logging.getLogger(__name__)
 
 
 def pagerank(
@@ -193,11 +197,11 @@ def _free_local_checkpoint(df: DataFrame) -> None:
     ``LogicalRDD`` whose rdd handle unpersists exactly OUR block — no id
     guessing, safe with concurrent callers persisting their own frames.
     Best-effort: on any internals mismatch the ContextCleaner/GC backstop
-    still reclaims the block eventually."""
+    still reclaims the block eventually, and a warning says so."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
-        pass
+        log.warning("local checkpoint not released, left to the context cleaner", exc_info=True)
 
 
 def link_distance(

@@ -133,7 +133,8 @@ class Percolator:
     per-batch driver work). Without it, the FIRST ``match`` probes that
     batch for routing df and the compiled index is reused afterwards —
     routing df never affects correctness, so later batches' df drift
-    only perturbs candidate selectivity."""
+    only perturbs candidate selectivity. Below ``probe_min_queries``
+    stored queries there is no probe and ``df_probe`` is ignored."""
 
     def __init__(
         self,
@@ -266,7 +267,13 @@ def percolate(
     has (qid long, query string); empty queries never match.
 
     One-shot convenience over ``Percolator`` — repeated callers (streams,
-    benches) should compile a Percolator once and ``match`` per batch."""
+    benches) should compile a Percolator once and ``match`` per batch.
+
+    ``df_probe`` (docs sampled for routing df when ``df_stats`` is None)
+    is ignored below ``probe_min_queries`` stored queries: such small sets
+    route term-sorted without a probe job. Routing never changes the
+    emitted rows, only how many candidates are checked; pass
+    ``probe_min_queries=0`` to always probe."""
     if not broadcast_queries:
         return _percolate_join(docs, queries, analyzer, min_should, df_stats, df_probe)
     return Percolator(

@@ -14,8 +14,10 @@ BM25 (north_star, k1=1.2 b=0.75) uses the Lucene/ATIRE idf
 ``ln(1 + (N - df + 0.5)/(df + 0.5))`` and
 ``tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl))``; doc length comes from the ``dls``
 array denormalized into the postings at build time, so the only query-time
-state is a broadcast map of per-term df — no join against a doc-stats
-table.
+state is per-term df — no join against a doc-stats table. Both scorers are
+one SQL text each (``InvertedIndex.query``): on a warm index df is read
+from the column ``warm()`` stamped onto the postings and the query is one
+Spark job; otherwise it is a literal ``CASE`` from the termstats probe.
 
 Block-max pruning (``bm25_topk(prune=True)``): blocks are docid-range
 aligned ACROSS terms (build.py), so for a range r the upper bound
@@ -37,7 +39,7 @@ from pyspark.sql import functions as F
 
 from mini_search_engine_spark.analysis.udfs import analyze_query
 from mini_search_engine_spark.index.build import InvertedIndex
-from mini_search_engine_spark.index.termid import term_id_py, term_ids
+from mini_search_engine_spark.index.termid import term_id_py
 
 K1 = 1.2
 B = 0.75
@@ -58,11 +60,11 @@ def _analyzed_with_counts(index: InvertedIndex, keywords: list[str]) -> Counter:
 
 
 def _df_map(index: InvertedIndex, terms: list[str]) -> dict[str, int]:
-    """term → df for the (few) analyzed query terms. On a warm index the
-    dfs are memoized driver-side (``InvertedIndex.df_cache``; a warm index
-    is immutable, so entries never go stale) — a repeated-term query skips
-    this lookup job entirely, one fewer sequential stage wave at serving
-    time. Absent terms are negative-cached as 0 (callers treat 0 as
+    """term → df for the (few) analyzed query terms, for the scorers that
+    take df as a driver-side literal. On a warm index the dfs are memoized
+    driver-side (``InvertedIndex.df_cache``; a warm index is immutable, so
+    entries never go stale) — a repeated-term query skips this lookup job
+    entirely. Absent terms are negative-cached as 0 (callers treat 0 as
     missing already)."""
     cache = index.df_cache
     if cache is None:
@@ -91,142 +93,115 @@ def _exploded(posts: DataFrame) -> DataFrame:
     )
 
 
+def _sql_double(x: float) -> str:
+    """A double literal for SQL text (a bare ``1.5`` parses as DECIMAL)."""
+    return f"{float(x)!r}D"
+
+
+def _tid_case(values: dict[int, float]) -> str:
+    arms = " ".join(f"WHEN {tid}L THEN {_sql_double(v)}" for tid, v in values.items())
+    return f"CASE tid {arms} END"
+
+
+def _scored_terms(
+    index: InvertedIndex, terms: list[str]
+) -> tuple[dict[int, str], dict[int, int] | None]:
+    """tid → term for the analyzed query ``terms`` worth scanning, plus the
+    df source ``InvertedIndex.query`` needs. A warm index's rows carry df
+    (``None``: no probe, and absent terms simply match no rows); any other
+    index probes termstats (``_df_map``) and scans only the terms found."""
+    if index.serving_view is not None:
+        return {term_id_py(t): t for t in terms}, None
+    dfm = _df_map(index, terms)
+    by_tid = {term_id_py(t): t for t in terms if dfm.get(t)}
+    return by_tid, {tid: dfm[t] for tid, t in by_tid.items()}
+
+
+_TFIDF_SQL = """SELECT docid, sum(tf * ({n} / df) * ({qc} * ({n} / df)))
+  / sqrt(sum(tf * ({n} / df) * (tf * ({n} / df)))) AS score
+FROM {postings} LATERAL VIEW inline(arrays_zip(docids, tfs)) z AS docid, tf
+WHERE tid IN {tids}
+GROUP BY block, docid
+ORDER BY score DESC, docid{limit}"""
+
+
 def search_tfidf(
     index: InvertedIndex, keywords: list[str], topk: int | None = 10
 ) -> DataFrame:
-    """Reference-parity TF-IDF top-k → (docid, score) descending."""
+    """Reference-parity TF-IDF top-k → (docid, score) descending: per
+    posting ``x = tf·N/df``, ``score = Σ x·q[t] / sqrt(Σ x²)`` with the
+    query weight ``q[t] = multiplicity·N/df`` a literal ``CASE`` over the
+    driver-hashed term ids."""
     counts = _analyzed_with_counts(index, keywords)
-    if not counts:
+    by_tid, df = _scored_terms(index, sorted(counts))
+    if not by_tid:
         return _empty_scored(index)
-    terms = sorted(counts)
-    dfm = _df_map(index, terms)
-    n = index.n_docs
-    # term → (query-weight, idf) scalars folded into chained-CASE literals
-    # over the DRIVER-HASHED term ids (same rationale as BM25: no
-    # broadcast-exchange build per query job; int equality, not string)
-    rows = [
-        (term_id_py(t), counts[t] * (n / dfm[t]), n / dfm[t])
-        for t in terms
-        if dfm.get(t)
-    ]
-    if not rows:
-        return _empty_scored(index)
-    qw_expr = F.lit(0.0)
-    idf_expr = F.lit(0.0)
-    for tid, qw, idf in rows:
-        qw_expr = F.when(F.col("tid") == F.lit(tid), F.lit(float(qw))).otherwise(qw_expr)
-        idf_expr = F.when(F.col("tid") == F.lit(tid), F.lit(float(idf))).otherwise(idf_expr)
-
-    from dataclasses import replace as _rep
-
-    filtered = index.postings.filter(F.col("tid").isin(term_ids(terms)))
-    filtered = _rep(index, postings=filtered).decoded().postings
-    tfidf = F.col("tf") * idf_expr
-    scored = (
-        _exploded(filtered)
-        .groupBy("docid")
-        .agg(
-            F.sum(tfidf * qw_expr).alias("dot"),
-            F.sum(tfidf * tfidf).alias("len2"),
-        )
-        .select("docid", (F.col("dot") / F.sqrt(F.col("len2"))).alias("score"))
+    return index.query(
+        _TFIDF_SQL,
+        list(by_tid),
+        df,
+        n=_sql_double(index.n_docs),
+        qc=_tid_case({tid: counts[t] for tid, t in by_tid.items()}),
+        limit="" if topk is None else f" LIMIT {int(topk)}",
     )
-    out = scored.orderBy(F.desc("score"), F.asc("docid"))
-    return out.limit(topk) if topk is not None else out
 
 
 def _bm25_idf(n: int, df: int) -> float:
     return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
 
-def _bm25_qvec(index: InvertedIndex, keywords: list[str]):
-    counts = _analyzed_with_counts(index, keywords)
-    if not counts:
-        return None
-    dfm = _df_map(index, sorted(counts))
-    rows = [
-        (term_id_py(t), float(counts[t]), _bm25_idf(index.n_docs, dfm[t]))
-        for t in sorted(counts)
-        if dfm.get(t)
-    ]
-    return rows or None
-
-
 def _term_weight_expr(rows: list[tuple[int, float, float]]) -> F.Column:
     """Per-term weight qw·idf as a chained-CASE literal over the (few)
-    query term IDS (driver-hashed — int equality in codegen). Query state
-    is a handful of scalars — folding them into the expression keeps every
-    scoring job a single stage, where a broadcast join would add a
-    broadcast-exchange build (measured ~0.2-0.5 s of fixed latency PER JOB
-    on this box, paid twice more by the pruned path's extra jobs)."""
+    query term IDS (driver-hashed — int equality in codegen), for the
+    pruned path's block upper bounds. Folding the scalars into the
+    expression avoids a broadcast-exchange build per job (measured
+    ~0.2-0.5 s of fixed latency PER JOB on this box)."""
     chain = F.lit(0.0)
     for tid, qw, idf in rows:
         chain = F.when(F.col("tid") == F.lit(tid), F.lit(float(qw * idf))).otherwise(chain)
     return chain
 
 
-def _bm25_exact(
-    posts: DataFrame, rows: list[tuple[str, float, float]], avgdl: float
+# The one BM25 scoring expression: idf from each row's df (stamped on a warm
+# index, a probe literal otherwise), doc length from the dls array
+# denormalized into the postings, so no doc-stats join.
+_BM25_SQL = """SELECT docid, sum({qw} * ln(1.0D + ({n} - df + 0.5D) / (df + 0.5D))
+  * (tf * {k1p1}) / (tf + {k1} * ({omb} + {b} * dl / {avgdl}))) AS score
+FROM {postings} LATERAL VIEW inline(arrays_zip(docids, tfs, dls)) z AS docid, tf, dl
+WHERE tid IN {tids}{blocks}
+GROUP BY block, docid{tail}"""
+
+
+def _bm25(
+    index: InvertedIndex,
+    weights: dict[str, float],
+    topk: int | None,
+    blocks: list[int] | None = None,
 ) -> DataFrame:
-    w = _term_weight_expr(rows)
-    denom = F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / avgdl)
-    return (
-        _exploded(posts)
-        .groupBy("docid")
-        .agg(F.sum(w * (F.col("tf") * (K1 + 1.0)) / denom).alias("score"))
-    )
-
-
-def _bm25_topk_fused_cold(
-    index: InvertedIndex, counts: Counter, topk: int
-) -> DataFrame:
-    """Single-JOB exact BM25 for cold terms on a warm serving index
-    (VERDICT r3 item 6): the per-term df is recovered INSIDE the scoring
-    job instead of a separate termstats-probe job. Every postings row
-    carries its block's posting count ``n`` and df = Σ n over the term's
-    blocks, so a window ``sum(n) over (partition by tid)`` on the
-    term-filtered frame (query-terms × blocks rows — a few hundred)
-    reconstructs df, and idf becomes a column expression. One driver
-    round trip end-to-end where the probe+literal path takes two
-    sequential stage waves; at concurrency the saved wave is the p50 term
-    that grows with queue depth. The probe+literal path stays optimal for
-    memo-HIT terms (no window exchange at all)."""
-    from dataclasses import replace as _rep
-
-    from pyspark.sql import Window
-
-    qw_by_tid = {term_id_py(t): float(c) for t, c in counts.items()}
-    raw = index.postings.filter(F.col("tid").isin(list(qw_by_tid)))
-    withdf = raw.withColumn(
-        "qdf", F.sum("n").over(Window.partitionBy("tid")).cast("double")
-    )
-    posts = withdf
-    if index.compressed:
-        posts = _rep(index, postings=withdf).decoded().postings
-    n = float(index.n_docs)
-    idf = F.log(
-        F.lit(1.0) + (F.lit(n) - F.col("qdf") + F.lit(0.5)) / (F.col("qdf") + F.lit(0.5))
-    )
-    qw = F.lit(0.0)
-    for tid, c in qw_by_tid.items():
-        qw = F.when(F.col("tid") == F.lit(tid), F.lit(c)).otherwise(qw)
-    ex = posts.select(
-        "tid",
-        "qdf",
-        F.explode(F.arrays_zip("docids", "tfs", "dls")).alias("z"),
-    ).select(
-        "tid",
-        "qdf",
-        F.col("z.docids").alias("docid"),
-        F.col("z.tfs").alias("tf"),
-        F.col("z.dls").alias("dl"),
-    )
-    denom = F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / index.avgdl)
-    return (
-        ex.groupBy("docid")
-        .agg(F.sum(qw * idf * (F.col("tf") * (K1 + 1.0)) / denom).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(topk)
+    """Exact BM25 → (docid, score) for the analyzed query vector
+    ``weights`` (term → query weight): the top ``topk`` by (score DESC,
+    docid ASC), or every matching doc unranked when ``topk`` is None.
+    ``blocks`` restricts the scan to those docid ranges."""
+    by_tid, df = _scored_terms(index, sorted(t for t, w in weights.items() if w))
+    if not by_tid:
+        return _empty_scored(index)
+    tail = "" if topk is None else f"\nORDER BY score DESC, docid LIMIT {int(topk)}"
+    in_blocks = ""
+    if blocks is not None:
+        in_blocks = f" AND block IN ({', '.join(f'{int(b)}L' for b in blocks)})"
+    return index.query(
+        _BM25_SQL,
+        list(by_tid),
+        df,
+        qw=_tid_case({tid: weights[t] for tid, t in by_tid.items()}),
+        n=_sql_double(index.n_docs),
+        k1p1=_sql_double(K1 + 1.0),
+        k1=_sql_double(K1),
+        omb=_sql_double(1.0 - B),
+        b=_sql_double(B),
+        avgdl=_sql_double(index.avgdl),
+        blocks=in_blocks,
+        tail=tail,
     )
 
 
@@ -238,105 +213,47 @@ def bm25_topk(
     prune_min_blocks: int = 64,
     prune_min_postings: int = 5_000_000,
 ) -> DataFrame:
-    """BM25 top-k → (docid, score) descending, ties by ascending docid."""
-    # The fused-cold path recovers df as sum(n) over the term's posting
-    # blocks — valid ONLY when the postings are complete. On a pruned
-    # (champion) tier that sum is the capped df and would inflate idf,
-    # breaking prune.py's "surviving docs score identically" invariant
-    # (and disagree with the termstats-fed memo on repeat queries), so
-    # pruned indexes always take the global-termstats probe path below.
-    if not prune and index.df_cache is not None and not index.pruned:
-        counts = _analyzed_with_counts(index, keywords)
-        if not counts:
-            return _empty_scored(index)
-        missing = [t for t in counts if t not in index.df_cache]
-        if missing:
-            # warm serving, cold terms → fuse the df probe into the
-            # scoring job (single stage wave; see _bm25_topk_fused_cold)
-            # and fill the memo ASYNCHRONOUSLY so repeats of these terms
-            # take the literal path without ever paying a probe wave
-            # (dict writes are GIL-atomic; failures just leave the memo
-            # cold, never wrong)
-            import threading
-
-            def _fill(ts=missing, idx=index):
-                try:
-                    # own job group: Spark localProperties are inherited by
-                    # child threads, so without this the background probe
-                    # would be attributed to the CALLER's job group
-                    sc = idx.termstats.sparkSession.sparkContext
-                    sc.setJobGroup("bm25-df-memo-fill", "async df memo fill")
-                    found = {
-                        r["term"]: int(r["df"])
-                        for r in idx.termstats.filter(F.col("term").isin(ts)).collect()
-                    }
-                    for t in ts:
-                        idx.df_cache.setdefault(t, found.get(t, 0))
-                except Exception:
-                    pass
-
-            threading.Thread(target=_fill, daemon=True).start()
-            return _bm25_topk_fused_cold(index, counts, topk)
-    if prune:
-        # cost-based fallback #2 (r6, measured): the two-phase pruned path
-        # pays 3 extra sequential driver round trips (~0.3 s each on this
-        # box) before the final job; its benefit is the fraction of the
-        # query terms' postings it never decodes. The exact path's marginal
-        # cost is decode+score of Σ df(term) postings, so below a postings
-        # budget there is nothing worth skipping: sf1.0 local[32] A/B —
-        # pruned 1.35 s vs exact 0.42 s at Σ df ≈ 10⁵. The dfs are already
-        # driver-side (the _df_map probe the qvec needs anyway), so the
-        # gate is pure driver arithmetic; at real scale common terms carry
-        # df ≫ the budget and pruning stays on.
-        counts = _analyzed_with_counts(index, keywords)
-        if not counts:
-            return _empty_scored(index)
-        dfm = _df_map(index, sorted(counts))
-        rows = [
-            (term_id_py(t), float(counts[t]), _bm25_idf(index.n_docs, dfm[t]))
-            for t in sorted(counts)
-            if dfm.get(t)
-        ] or None
-        if sum(dfm.get(t) or 0 for t in counts) < prune_min_postings:
-            prune = False
-    else:
-        rows = _bm25_qvec(index, keywords)
-    if rows is None:
+    """BM25 top-k → (docid, score) descending, ties by ascending docid.
+    On a warm index the exact path is one Spark job; ``prune=True`` adds
+    block-max pruning behind two cost gates."""
+    counts = _analyzed_with_counts(index, keywords)
+    if not counts:
         return _empty_scored(index)
-    spark = index.postings.sparkSession
-    qtids = [r[0] for r in rows]
-    # tid/block filters are applied to the RAW postings (stats + byte
-    # columns only) and the codec UDF runs strictly on the surviving rows —
-    # pruning must reduce Python/Arrow work, not merely row counts.
-    raw = index.postings.filter(F.col("tid").isin(qtids))
-
-    def dec(df: DataFrame) -> DataFrame:
-        if not index.compressed:
-            return df
-        from dataclasses import replace as _rep
-
-        return _rep(index, postings=df).decoded().postings
-
+    if not prune:
+        return _bm25(index, counts, topk)
+    # cost-based fallback #2 (r6, measured): the two-phase pruned path
+    # pays 3 extra sequential driver round trips (~0.3 s each on this
+    # box) before the final job; its benefit is the fraction of the
+    # query terms' postings it never decodes. The exact path's marginal
+    # cost is decode+score of Σ df(term) postings, so below a postings
+    # budget there is nothing worth skipping: sf1.0 local[32] A/B —
+    # pruned 1.35 s vs exact 0.42 s at Σ df ≈ 10⁵. The dfs are
+    # driver-side (the _df_map probe the upper bounds need anyway), so
+    # the gate is pure driver arithmetic; at real scale common terms
+    # carry df ≫ the budget and pruning stays on.
+    dfm = _df_map(index, sorted(counts))
+    rows = [
+        (term_id_py(t), float(counts[t]), _bm25_idf(index.n_docs, dfm[t]))
+        for t in sorted(counts)
+        if dfm.get(t)
+    ]
+    if not rows:
+        return _empty_scored(index)
     # cost-based fallback: the two-phase pruning spends 2 extra Spark jobs
     # (UB ranking + θ seeding); with only a handful of docid ranges there is
     # nothing to skip, so run the single-job exact plan. Driver-side
     # arithmetic — no extra action.
     n_blocks = (index.n_docs + index.block_span - 1) // max(index.block_span, 1)
-    if prune and n_blocks < prune_min_blocks:
-        prune = False
-
-    if not prune:
-        return (
-            _bm25_exact(dec(raw), rows, index.avgdl)
-            .orderBy(F.desc("score"), F.asc("docid"))
-            .limit(topk)
-        )
+    if sum(dfm.get(t) or 0 for t in counts) < prune_min_postings or n_blocks < prune_min_blocks:
+        return _bm25(index, counts, topk)
 
     # ---- block-max pruning over docid-range-aligned blocks ----
     # Distributed throughout: per-range upper bounds are a DataFrame agg
     # over BLOCK-LEVEL stats (no posting arrays touched); only the top few
     # ranges needed to seed θ are ever collected (≤ a few hundred rows,
-    # independent of corpus size).
+    # independent of corpus size). tid/block filters apply to the RAW
+    # postings, so the codec UDF runs strictly on the surviving rows.
+    raw = index.postings.filter(F.col("tid").isin([r[0] for r in rows]))
     avgdl = index.avgdl
     w = _term_weight_expr(rows)
     ub_expr = (
@@ -368,34 +285,29 @@ def bm25_topk(
         cand += r["n_cand"]
         if cand >= max(topk, 1):
             break
-    p1 = _bm25_exact(dec(raw.filter(F.col("block").isin(phase1))), rows, avgdl)
-    top1 = p1.orderBy(F.desc("score"), F.asc("docid")).limit(topk).collect()
+    top1 = _bm25(index, counts, topk, blocks=phase1).collect()
     theta = top1[-1]["score"] if len(top1) >= topk else float("-inf")
 
-    # Phase 2: exact-score only surviving ranges (ub ≥ θ). When pruning
-    # works, the survivor list is SHORT — collect up to a bounded prefix
-    # and push it as an InSet predicate (single-stage final job). Only if
-    # more than the cap survive (pruning not selective — e.g. uniform
-    # scores) fall back to a distributed semi-join on the block id.
+    # Phase 2: exact-score only surviving ranges (ub ≥ θ), pushed as an
+    # InSet predicate. When more than the cap survive, pruning is not
+    # selective (e.g. uniform scores) and the exact plan over every range
+    # costs no more.
     surv = ub_range.filter((F.col("ub") >= theta) & ~F.col("block").isin(phase1))
     cap = 8192
     surv_ids = [r["block"] for r in surv.select("block").limit(cap + 1).collect()]
-    if len(surv_ids) <= cap:
-        p2_src = raw.filter(F.col("block").isin(surv_ids)) if surv_ids else None
-    else:
-        p2_src = raw.join(F.broadcast(surv.select("block")), "block", "left_semi")
-    seed = spark.createDataFrame(
+    if len(surv_ids) > cap:
+        return _bm25(index, counts, topk)
+    seed = index.postings.sparkSession.createDataFrame(
         [(r["docid"], r["score"]) for r in top1], "docid long, score double"
     )
-    if p2_src is None:
+    if not surv_ids:
         return seed.orderBy(F.desc("score"), F.asc("docid")).limit(topk)
-    p2 = _bm25_exact(dec(p2_src), rows, avgdl)
-    out = (
-        p2.unionByName(seed)
+    return (
+        _bm25(index, counts, None, blocks=surv_ids)
+        .unionByName(seed)
         .orderBy(F.desc("score"), F.asc("docid"))
         .limit(topk)
     )
-    return out
 
 
 def bm25_topk_weighted(
@@ -405,29 +317,9 @@ def bm25_topk_weighted(
     {term: weight} — ``bm25_topk`` with real-valued term weights instead
     of analyzer multiplicities. The composable form relevance-feedback
     expansion needs: expansion terms enter with fractional weight, and the
-    plan is identical to the unweighted path (one pruned scan, weights
-    folded into the chained-CASE literal)."""
-    terms = sorted(t for t, qw in weights.items() if qw)
-    if not terms:
-        return _empty_scored(index)
-    dfm = _df_map(index, terms)
-    rows = [
-        (term_id_py(t), float(weights[t]), _bm25_idf(index.n_docs, dfm[t]))
-        for t in terms
-        if dfm.get(t)
-    ]
-    if not rows:
-        return _empty_scored(index)
-    raw = index.postings.filter(F.col("tid").isin([r[0] for r in rows]))
-    if index.compressed:
-        from dataclasses import replace as _rep
-
-        raw = _rep(index, postings=raw).decoded().postings
-    return (
-        _bm25_exact(raw, rows, index.avgdl)
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(topk)
-    )
+    plan is identical to the unweighted path (weights folded into the
+    chained-CASE literal)."""
+    return _bm25(index, weights, topk)
 
 
 def bm25_scores(index: InvertedIndex, keywords: list[str]) -> DataFrame:
@@ -435,15 +327,7 @@ def bm25_scores(index: InvertedIndex, keywords: list[str]) -> DataFrame:
     composable form of ``bm25_topk`` (no ordering, no limit) used by
     multi-field combination, where the top-k cut must happen AFTER the
     per-field scores are summed."""
-    rows = _bm25_qvec(index, keywords)
-    if rows is None:
-        return _empty_scored(index)
-    raw = index.postings.filter(F.col("tid").isin([r[0] for r in rows]))
-    if index.compressed:
-        from dataclasses import replace as _rep
-
-        raw = _rep(index, postings=raw).decoded().postings
-    return _bm25_exact(raw, rows, index.avgdl)
+    return _bm25(index, _analyzed_with_counts(index, keywords), None)
 
 
 def rescore_topk(

@@ -18,6 +18,7 @@ from mini_search_engine_spark.search import (
     search_phrase,
     search_tfidf,
 )
+from tools.plan_audit import query_exchanges
 
 
 @pytest.fixture(scope="module")
@@ -213,28 +214,97 @@ def test_search_near_proximity(spark):
     idx.unpersist()
 
 
-def test_warm_df_memo(corpus):
-    """The warm index memoizes per-term dfs driver-side: repeated queries
-    answer identically (memo-hit path == lookup path == cold path), absent
-    terms are negative-cached, and delete_terms drops the memo so deleted
-    terms cannot resolve from it."""
+WARM_QUERIES = {
+    "bm25": lambda idx: bm25_topk(idx, ["cat", "dog", "retrieval"], 5),
+    "tfidf": lambda idx: search_tfidf(idx, ["cat", "dog"], 5),
+    "keyword": lambda idx: search_keyword(idx, "dog"),
+    "and": lambda idx: search_and(idx, ["cat", "dog"]),
+    "or": lambda idx: search_or(idx, ["cat", "retrieval"]),
+    "phrase": lambda idx: search_phrase(idx, "information retrieval"),
+}
+
+
+def _rows(df):
+    return [tuple(round(v, 9) if isinstance(v, float) else v for v in r) for r in df.collect()]
+
+
+@pytest.fixture(scope="module")
+def warm_pair(corpus):
+    cold = build_index(corpus, analyzer="porter", positional=True, block_span=4, compress=True)
+    warm = cold.warm()
+    yield cold, warm
+    warm.unpersist()
+    cold.unpersist()
+
+
+@pytest.mark.parametrize("kind", sorted(WARM_QUERIES))
+def test_warm_query_is_one_job_without_exchange(spark, warm_pair, kind):
+    """On warm()'s block-range layout every query kind groups and orders on
+    (block, docid) with no exchange, so it runs as exactly ONE Spark job,
+    with the same rows as on the unwarmed index."""
+    cold, warm = warm_pair
+    want = _rows(WARM_QUERIES[kind](cold))
+    assert want  # the query matches something
+    sc = spark.sparkContext
+    df = WARM_QUERIES[kind](warm)
+    group = f"warm-{kind}"
+    sc.setJobGroup(group, group)
+    try:
+        got = _rows(df)
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == want
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert query_exchanges(df) == [], df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_warm_deletes_drop_stamped_df(spark, corpus):
+    """A warm index stamps each term's df onto its postings. Doc and term
+    deletes change df, so they drop the stamped column and the serving
+    view: scores then equal a fresh build over the live docs."""
+    from pyspark.sql import functions as F
+
+    from mini_search_engine_spark.index.deletes import apply_deletes
     from mini_search_engine_spark.index.merge import delete_terms
 
-    idx = build_index(corpus, analyzer="porter", block_span=4, compress=True)
+    def build(docs):
+        return build_index(docs, analyzer="porter", positional=True, block_span=4, compress=True)
+
+    idx = build(corpus)
     warm = idx.warm()
-    assert warm.df_cache == {}
-    cold = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(idx, ["cat", "dog"], 5).collect()]
-    w1 = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(warm, ["cat", "dog"], 5).collect()]
-    w2 = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(warm, ["cat", "dog"], 5).collect()]
-    assert w1 == w2 == cold
-    assert warm.df_cache["cat"] > 0 and warm.df_cache["dog"] > 0
-    assert bm25_topk(warm, ["zzzunseen"], 5).collect() == []
-    assert 0 in warm.df_cache.values()  # absent term negative-cached
-    deleted = delete_terms(warm, ["cat"])
-    assert deleted.df_cache is None
-    assert bm25_topk(deleted, ["cat"], 5).collect() == []
+    assert warm.df_cache == {} and "df" in warm.postings.columns
+    gone = apply_deletes(warm, spark.createDataFrame([(0,), (7,)], "docid long"))
+    fresh = build(corpus.filter(~F.col("docid").isin(0, 7)))
+    assert gone.serving_view is None and "df" not in gone.postings.columns
+    for q in (["cat", "dog"], ["retrieval", "quick"]):
+        assert _rows(bm25_topk(gone, q, 8)) == _rows(bm25_topk(fresh, q, 8))
+        assert _rows(search_tfidf(gone, q, 8)) == _rows(search_tfidf(fresh, q, 8))
+    dropped = delete_terms(warm, ["cat"])
+    assert dropped.serving_view is None and dropped.df_cache is None
+    assert bm25_topk(dropped, ["cat"], 5).collect() == []
+    assert _rows(bm25_topk(dropped, ["cat", "dog"], 8)) == _rows(bm25_topk(idx, ["dog"], 8))
+    for i in (warm, fresh, idx):
+        i.unpersist(corpus=False)
+
+
+def test_warm_unpersist_releases_every_cache(spark, warm_pair, tmp_path):
+    """warm() decodes into a temporary cache on the way to its layout; the
+    index it returns owns everything else, so unpersist() leaves no
+    cached RDD and no view behind."""
+    path = str(tmp_path / "idx")
+    write_index(warm_pair[0], path)
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached():
+        return {r.id() for r in jsc.getRDDStorageInfo()}
+
+    before = cached()
+    warm = read_index(spark, path).warm()
+    assert cached() - before  # the layout and sidecar pins
+    assert bm25_topk(warm, ["cat"], 3).collect()
     warm.unpersist()
-    idx.unpersist()
+    assert cached() == before
+    assert warm.serving_view not in {t.name for t in spark.catalog.listTables()}
 
 
 def test_compressed_roundtrip_index(corpus):
@@ -542,60 +612,6 @@ def test_corpus_cache_released_and_docids_deterministic(spark):
         for r in docs.select("repo", "path", "docid").collect()
     }
     assert ids1 == ids2
-
-
-def test_bm25_fused_cold_single_job(spark, corpus):
-    """VERDICT r3 item 6: on a warm serving index, a BM25 query whose
-    terms are NOT yet in the df memo must run as ONE Spark job (df
-    recovered in-job from the per-block n via a tid window — no separate
-    termstats probe wave) and be score-identical to the probe+literal
-    path; the async memo fill then graduates repeats to the literal path,
-    also one job."""
-    import time
-
-    ref = build_index(corpus, analyzer="porter", block_span=4, compress=True)
-    want = [
-        (r["docid"], round(r["score"], 9))
-        for r in bm25_topk(ref, ["cat", "retrieval"], 5).collect()
-    ]
-    warm = build_index(corpus, analyzer="porter", block_span=4, compress=True).warm()
-    assert warm.df_cache == {}
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def run(group):
-        sc.setJobGroup(group, group)
-        try:
-            return [
-                (r["docid"], round(r["score"], 9))
-                for r in bm25_topk(warm, ["cat", "retrieval"], 5).collect()
-            ]
-        finally:
-            sc.setJobGroup(None, None)
-
-    got_cold = run("bm25-cold")
-    assert got_cold == want
-    # AQE materializes each exchange as its own job id, so the invariant
-    # is RELATIVE: the cold fused query must not exceed the memo-hit
-    # literal query's job count — i.e. the driver-side df probe wave
-    # (one extra sequential collect) is gone
-    jobs_cold = len(tracker.getJobIdsForGroup("bm25-cold"))
-
-    # async memo fill lands without any caller-side wave
-    deadline = time.time() + 15
-    while time.time() < deadline and "cat" not in warm.df_cache:
-        time.sleep(0.1)
-    # memo keys are the ANALYZED terms (porter: retrieval → retriev)
-    assert warm.df_cache.get("cat") and warm.df_cache.get("retriev")
-
-    got_hot = run("bm25-hot")
-    assert got_hot == want
-    jobs_hot = len(tracker.getJobIdsForGroup("bm25-hot"))
-    assert jobs_cold <= jobs_hot + 1, (jobs_cold, jobs_hot)
-    # and strictly fewer than the old probe-then-score protocol would pay
-    # (hot-path jobs + 1 sequential probe job)
-    ref.unpersist()
-    warm.unpersist()
 
 
 def test_snippets_and_serving_page(spark):

@@ -230,3 +230,27 @@ def test_build_index_runs_collision_check(spark, monkeypatch):
     assert len(calls) == 1
     build_index(_mk(spark, rows), block_span=8, check_tid_collisions=False).unpersist()
     assert len(calls) == 1
+
+
+def test_read_lineage_logs_unreadable_but_not_missing(spark, tmp_path, caplog):
+    """No lineage yet (no directory, or an empty one) is the normal state
+    of a fresh build and stays silent; any other read failure still
+    resumes from scratch but is logged."""
+    import logging
+
+    from mini_search_engine_spark.index.lineage import read_lineage
+
+    (tmp_path / "empty" / "lineage").mkdir(parents=True)
+    with caplog.at_level(logging.WARNING, logger="mini_search_engine_spark.index.lineage"):
+        assert read_lineage(spark, str(tmp_path / "nowhere")) is None
+        assert read_lineage(spark, str(tmp_path / "empty")) is None
+        assert not caplog.records
+
+        class Unreadable:
+            class read:
+                @staticmethod
+                def option(*_):
+                    raise OSError("permission denied")
+
+        assert read_lineage(Unreadable, str(tmp_path)) is None
+    assert [r.levelname for r in caplog.records] == ["WARNING"]

@@ -84,6 +84,17 @@ def test_first_band_pairs_match_any_band_distinct(spark):
     assert old.exceptAll(new).count() == 0
 
 
+def test_first_band_pairs_repeated_docid_row(dup_corpus):
+    """A docid whose row appears twice in the input yields no (a, a)
+    self-pair and no duplicate pair rows: the same pairs as the input
+    without the repeat."""
+    want = sorted(tuple(r) for r in minhash_candidate_pairs(dup_corpus).collect())
+    repeated = dup_corpus.unionByName(dup_corpus.filter(F.col("docid") == 0))
+    got = sorted(tuple(r) for r in minhash_candidate_pairs(repeated).collect())
+    assert got == want
+    assert all(a != b for a, b in got)
+
+
 def test_ngram_jaccard(dup_corpus):
     rows = ngram_jaccard_pairs(dup_corpus, threshold=0.3, band_size=2).collect()
     vals = {(r["docid_a"], r["docid_b"]): r["jaccard"] for r in rows}

@@ -171,3 +171,15 @@ def test_personalized_pagerank_hand(spark):
 
     with _pt.raises(ValueError):
         personalized_pagerank(edges, [])
+
+
+def test_free_local_checkpoint_failure_is_logged(spark, caplog):
+    """Releasing a frame that is not a local checkpoint cannot free a
+    block; the cleanup stays best-effort but says so."""
+    import logging
+
+    from mini_search_engine_spark.search.pagerank import _free_local_checkpoint
+
+    with caplog.at_level(logging.WARNING, logger="mini_search_engine_spark.search.pagerank"):
+        _free_local_checkpoint(spark.range(3))
+    assert [r.levelname for r in caplog.records] == ["WARNING"]

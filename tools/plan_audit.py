@@ -26,6 +26,28 @@ def final_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def query_exchanges(df) -> list[str]:
+    """Exchange nodes of ``df``'s executed plan (final once it has run),
+    not counting the plan of a cached relation it scans (a warm index's
+    layout was range-partitioned once, at warm time)."""
+    found = []
+
+    def walk(node):
+        kind = node.getClass().getSimpleName()
+        if "Exchange" in node.nodeName():
+            found.append(node.nodeName())
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if kind.endswith("QueryStageExec"):
+            return walk(node.plan())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
 def audit(sf_dir: str) -> list[dict]:
     from pyspark.sql import functions as F
 
@@ -198,6 +220,42 @@ def audit(sf_dir: str) -> list[dict]:
         },
         "bounded candidate broadcast; rescore scan reads query-term postings only",
     )
+
+    # 9. warm serving: warm()'s block-range layout carries the partitioning
+    #    every query kind needs — groups and order on (block, docid) — so
+    #    no query adds an exchange above the cached relation (one job each).
+    from mini_search_engine_spark.search import (
+        search_and,
+        search_keyword,
+        search_or,
+        search_phrase,
+        search_tfidf,
+    )
+
+    warm = build_index(
+        docs, analyzer="punct_nostem", positional=True, compress=True, block_span=64
+    ).warm()
+    warm_queries = {
+        "warm_bm25_topk": bm25_topk(warm, ["spark", "merge"], 10),
+        "warm_search_tfidf": search_tfidf(warm, ["spark", "merge"], 10),
+        "warm_search_keyword": search_keyword(warm, "spark"),
+        "warm_search_and": search_and(warm, ["spark", "merge"]),
+        "warm_search_or": search_or(warm, ["vector", "window"]),
+        "warm_search_phrase": search_phrase(warm, "batch batch"),
+    }
+    for name, df in warm_queries.items():
+        df.collect()  # finalize AQE
+        ex = query_exchanges(df)
+        checks.append(
+            {
+                "op": name,
+                "ok": not ex,
+                "patterns": {"Exchange above the cache": {"expected": False, "present": bool(ex)}},
+                "notes": "grouped and ordered on (block, docid) over the block-range layout",
+            }
+        )
+        print(("OK  " if not ex else "FAIL") + f" {name}")
+    warm.unpersist()
 
     spark.stop()
     return checks
