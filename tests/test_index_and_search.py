@@ -11,6 +11,7 @@ from mini_search_engine_spark.corpus import load_corpus
 from mini_search_engine_spark.index.build import build_index, read_index, write_index
 from mini_search_engine_spark.search import (
     bm25_topk,
+    bm25_topk_batch,
     full_scan_search,
     search_and,
     search_keyword,
@@ -305,6 +306,74 @@ def test_warm_unpersist_releases_every_cache(spark, warm_pair, tmp_path):
     warm.unpersist()
     assert cached() == before
     assert warm.serving_view not in {t.name for t in spark.catalog.listTables()}
+
+
+def test_warm_df_memo(corpus):
+    """The warm index memoizes per-term dfs driver-side for the scorers
+    that take df as a literal (batch BM25 here): it starts empty, fills on
+    use, negative-caches absent terms, answers identically to the cold
+    path, and delete_terms drops it so deleted terms cannot resolve from
+    it. bm25_topk reads the stamped df instead and leaves it untouched."""
+    from mini_search_engine_spark.index.merge import delete_terms
+
+    idx = build_index(corpus, analyzer="porter", block_span=4, compress=True)
+    warm = idx.warm()
+    assert warm.df_cache == {}
+    cold = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(idx, ["cat", "dog"], 5).collect()]
+    w1 = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(warm, ["cat", "dog"], 5).collect()]
+    w2 = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(warm, ["cat", "dog"], 5).collect()]
+    assert w1 == w2 == cold
+    assert warm.df_cache == {}
+
+    def batch(i):
+        return [
+            (r["docid"], round(r["score"], 9))
+            for r in bm25_topk_batch(i, {"q": ["cat", "dog"]}, 5).orderBy("rank").collect()
+        ]
+
+    assert batch(warm) == batch(warm) == batch(idx) == cold
+    assert warm.df_cache["cat"] > 0 and warm.df_cache["dog"] > 0
+    assert bm25_topk_batch(warm, {"q": ["zzzunseen"]}, 5).collect() == []
+    assert 0 in warm.df_cache.values()  # absent term negative-cached
+    deleted = delete_terms(warm, ["cat"])
+    assert deleted.df_cache is None
+    assert bm25_topk(deleted, ["cat"], 5).collect() == []
+    warm.unpersist()
+    idx.unpersist()
+
+
+def test_bm25_fused_cold_single_job(spark, corpus):
+    """On a warm serving index a BM25 query whose terms are NOT in the df
+    memo runs as ONE Spark job (df comes stamped on the postings rows, so
+    there is no termstats probe wave and no background memo fill), is
+    score-identical to the unwarmed index, and stays one job on repeat."""
+    ref = build_index(corpus, analyzer="porter", block_span=4, compress=True)
+    want = [
+        (r["docid"], round(r["score"], 9))
+        for r in bm25_topk(ref, ["cat", "retrieval"], 5).collect()
+    ]
+    warm = build_index(corpus, analyzer="porter", block_span=4, compress=True).warm()
+    assert warm.df_cache == {}
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(group):
+        sc.setJobGroup(group, group)
+        try:
+            return [
+                (r["docid"], round(r["score"], 9))
+                for r in bm25_topk(warm, ["cat", "retrieval"], 5).collect()
+            ]
+        finally:
+            sc.setJobGroup(None, None)
+
+    assert run("bm25-cold") == want
+    assert len(tracker.getJobIdsForGroup("bm25-cold")) == 1
+    assert warm.df_cache == {}  # nothing filled it behind the query
+    assert run("bm25-hot") == want
+    assert len(tracker.getJobIdsForGroup("bm25-hot")) == 1
+    ref.unpersist()
+    warm.unpersist()
 
 
 def test_compressed_roundtrip_index(corpus):
