@@ -24,12 +24,3 @@ STOP_WORDS_SORTED: tuple[str, ...] = tuple(sorted(STOP_WORDS))
 
 assert len(STOP_WORDS) == 127, len(STOP_WORDS)
 
-
-def sql_not_in_stopwords(expr: str) -> str:
-    """Render an ANSI-SQL predicate `<expr> NOT IN (<stopwords>)`.
-
-    Used to keep DuckDB oracle queries byte-equivalent to the Spark-side
-    stopword filter.
-    """
-    quoted = ", ".join(f"'{w}'" for w in STOP_WORDS_SORTED)
-    return f"{expr} NOT IN ({quoted})"

@@ -92,7 +92,7 @@ ANALYZERS: dict[str, Callable[[Column], Column]] = {
 # ComposableAnalyzer (``analysis/ComposableAnalyzer.java:8-24``); here the
 # same composability is a registry entry — ``register_wordbreak_analyzer``
 # wires a frequency dictionary in as analyzer ``name`` for analyze_col,
-# analyze_query AND build_index (tokenize_docs has a dedicated batch path).
+# analyze_query AND build_index (whose Arrow kernels run the DP per batch).
 WORDBREAK_ANALYZERS: dict[str, tuple[dict[str, float], int]] = {}
 
 

@@ -52,10 +52,11 @@ def assign_docids(
     every id. It also immunizes the exchange against giant-repo skew.
 
     Each output partition still covers one contiguous docid range
-    (``[offset_p, offset_p + count_p)``) — what ``local_blocks=True``
-    builds require. Determinism holds for a fixed ``num_partitions``;
-    resumable flows should pass it explicitly rather than inherit
-    ``defaultParallelism`` (SURVEY.md §7.1 trap #5).
+    (``[offset_p, offset_p + count_p)``), so ``build_index`` constructs
+    every posting block partition-locally, with no exchange. Determinism
+    holds for a fixed ``num_partitions``; resumable flows should pass it
+    explicitly rather than inherit ``defaultParallelism`` (SURVEY.md §7.1
+    trap #5).
 
     Replaces the reference's arrival-order assignment
     (``InvertedIndexManager.java:162-166``) with a resume-stable rule.
@@ -122,9 +123,11 @@ def load_corpus(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
 
     The input_hint shape comes back with each partition covering one
     CONTIGUOUS docid range (a property of ``assign_docids``'s
-    offset-stamping) — keep that partitioning when building with
-    ``local_blocks=True``. The attached ``_corpus_cache`` release handle
-    propagates to the returned frame (see ``release_corpus_cache``)."""
+    offset-stamping), and so does the doc_id shape when
+    ``num_partitions`` is given; ``build_index`` builds such input with no
+    exchange (it range-partitions anything else first). The attached
+    ``_corpus_cache`` release handle propagates to the returned frame (see
+    ``release_corpus_cache``)."""
     cols = set(df.columns)
     if {"doc_id", "text"} <= cols:
         out = df.withColumnRenamed("doc_id", "docid").withColumnRenamed("text", "content")
@@ -133,8 +136,8 @@ def load_corpus(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
         # Document requires non-null text; NULL → empty doc, dl 0)
         out = out.withColumn("content", F.coalesce(F.col("content"), F.lit("")))
         if num_partitions is not None:
-            # honor the partitioning promise for this shape too: contiguous
-            # docid ranges per partition, as local_blocks=True expects
+            # contiguous docid ranges per partition for this shape too, so
+            # build_index needs no exchange
             out = out.repartitionByRange(num_partitions, "docid")
     elif {"repo", "path", "content"} <= cols:
         out = assign_docids(df, ["repo", "path"], num_partitions=num_partitions)

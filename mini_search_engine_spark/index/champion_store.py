@@ -175,7 +175,6 @@ def refresh_champion(
             postings=kept.unionByName(repruned),
             positional=False,
             compressed=False,
-            tf=None,
             build_cache=None,
             df_cache=None,
             serving_view=None,

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -126,32 +125,6 @@ def naive_encode(values) -> bytes:
 
 def naive_decode(buf: bytes) -> np.ndarray:
     return np.frombuffer(bytes(buf), dtype=">i4").astype(np.int64)
-
-
-# ----------------------------- column functions -----------------------------
-
-@F.pandas_udf(BinaryType())
-def delta_varint_encode_udf(arrs: pd.Series) -> pd.Series:
-    return arrs.map(lambda a: delta_varint_encode(a) if a is not None else None)
-
-
-@F.pandas_udf(ArrayType(LongType()))
-def delta_varint_decode_udf(bufs: pd.Series) -> pd.Series:
-    return bufs.map(lambda b: delta_varint_decode(b).tolist() if b is not None else None)
-
-
-@F.pandas_udf(BinaryType())
-def varint_encode_udf(arrs: pd.Series) -> pd.Series:
-    return arrs.map(lambda a: varint_encode(a) if a is not None else None)
-
-
-@F.pandas_udf(ArrayType(IntegerType()))
-def varint_decode_int_udf(bufs: pd.Series) -> pd.Series:
-    return bufs.map(lambda b: varint_decode(b).astype("int32").tolist() if b is not None else None)
-
-
-def encoded_size(col: Column) -> Column:
-    return F.octet_length(col)
 
 
 # ----------------------- batch-segmented kernels ---------------------------
@@ -312,10 +285,6 @@ def _decode_batch(series: pd.Series, delta: bool) -> list[np.ndarray]:
     return np.split(vals, row_vends[:-1])
 
 
-def encode_batch_bytes(series: pd.Series, delta: bool) -> pd.Series:
-    return pd.Series(_encode_batch(series, delta))
-
-
 # ----------------------- position-list codec (C4) ---------------------------
 # The reference compresses position lists with the same delta+varint codec,
 # addressed via a global-offset index (``InvertedIndexManager.java:596-606``).
@@ -412,7 +381,13 @@ def encode_blocks_arrow(df, positional: bool):
     output is identical — same per-segment delta+varint kernels.
 
     Non-array columns pass through untouched; output column order is
-    (passthrough…, *_bytes) with the array columns dropped."""
+    (passthrough…, *_bytes) with the array columns dropped.
+
+    No build path calls it any more — ``build_index`` encodes inside its
+    fused kernel. It stays as the codec entry point for an already-built
+    uncompressed postings frame: the byte-exactness test checks it against
+    the pandas-UDF path, and the benchmark's traced runs wrap it by name
+    (``perfbench/workloads.py``)."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -430,9 +405,8 @@ def encode_blocks_arrow(df, positional: bool):
     pass_names = [f.name for f in passthrough]
 
     def _segments(arr):
-        """ListArray → (flat int64 child values, starts, ends) with the
-        slice-offset handling of _blocked_postings_arrow.emit: offsets
-        values index the UNsliced child, so trim to the used range."""
+        """ListArray → (flat int64 child values, starts, ends). Offsets
+        index the UNsliced child, so trim it to the used range."""
         offs = arr.offsets.to_numpy().astype(np.int64)
         base = int(offs[0])
         flat = arr.values.to_numpy().astype(np.int64)[base : int(offs[-1])]

@@ -150,7 +150,6 @@ def apply_deletes(index: InvertedIndex, tombstones: DataFrame) -> InvertedIndex:
         n_docs=int(stats["n"]),
         avgdl=float(stats["avgdl"] or 0.0),
         # views over rewritten frames own no caches of their own
-        tf=None,
         build_cache=None,
         corpus_cache=index.corpus_cache,
         df_cache=None,

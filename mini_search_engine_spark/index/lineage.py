@@ -117,16 +117,14 @@ def resumable_build(
         if n_docs_part == 0:
             row = {"pid": pid, "n_docs": 0, "n_postings": 0, "ts": time.time()}
         else:
-            # per-part builds take the fused shuffle-free path (the part IS
-            # a docid range; any sub-partitioning only yields split rows
-            # per (term, block), which every consumer re-aggregates)
+            # the part IS a docid range, so a docid-ranged corpus builds it
+            # with no exchange
             idx = build_index(
                 part_docs,
                 analyzer=analyzer,
                 positional=positional,
                 block_span=block_span,
                 compress=compress,
-                local_blocks=True,
                 # per-part check skipped: finalize_index runs the GLOBAL
                 # detector over the union of all part sidecars, which
                 # subsumes every per-part check — one job total, not one

@@ -51,22 +51,20 @@ def merge_segments(
     segments: list[InvertedIndex],
     rebase_docids: bool = False,
     block_span: int | None = None,
-    use_arrow: bool = False,
 ) -> InvertedIndex:
     """Merge index segments into one. ``rebase_docids=True`` reproduces the
     reference's segment-local-docid + offset scheme
     (``Utils.increaseDocId``, cumulative left-store sizes); with globally
     assigned docids (this engine's default) leave it False.
 
-    ``use_arrow=True`` routes the re-aggregation (positional included —
-    position lists ride the sorted pass as Arrow list offsets, VERDICT r2
-    item 7) through the sorted-Arrow kernel ``_blocked_postings_arrow``
-    instead of the Catalyst ``collect_list(struct)`` hash agg. Both
-    produce identical postings; measured on this box the hash agg WINS
-    whenever the exchange is needed anyway (sorting raw rows costs more
-    than hash-aggregating them — same result as the build-path A/B, see
-    ``build_index``), so the Catalyst plan stays the default and the Arrow
-    path is for range-partitioned inputs where the sort is nearly free."""
+    The re-aggregation is Catalyst's hash aggregation on (tid, block) —
+    ``collect_list`` of (docid, tf, dl[, positions]) structs, sorted
+    within each group — so every (tid, block) comes out as ONE row, the
+    split rows of partition-local builds included. It is the only merge
+    path (ingest compaction runs it) and the one posting-level exchange
+    in the engine: the segments' rows for a key live in different files,
+    and a hash agg over int keys beats sorting raw rows when they must
+    meet anyway. The merged postings are uncompressed."""
     assert segments, "need at least one segment"
     span = block_span or segments[0].block_span
     positional = all(s.positional for s in segments)
@@ -85,41 +83,33 @@ def merge_segments(
     for p in parts[1:]:
         merged = merged.unionByName(p)
 
-    if use_arrow:
-        from mini_search_engine_spark.index.build import _blocked_postings_arrow
-
-        cols = ["docid", "dl", "tid", "tf"] + (["positions"] if positional else [])
-        postings = _blocked_postings_arrow(
-            merged.select(*cols), span, compress=False, positional=positional
-        )
-    else:
-        blocked = merged.withColumn("block", (F.col("docid") / span).cast("long"))
-        fields = [F.col("docid"), F.col("tf"), F.col("dl")]
-        if positional:
-            fields.append(F.col("positions"))
-        agg = blocked.groupBy("tid", "block").agg(
-            F.sort_array(F.collect_list(F.struct(*fields))).alias("plist"),
-            F.count("*").cast("int").alias("n"),
-            F.min("docid").alias("min_docid"),
-            F.max("docid").alias("max_docid"),
-            F.max("tf").alias("max_tf"),
-            F.min("dl").alias("min_dl"),
-        )
-        cols = [
-            "tid",
-            "block",
-            "n",
-            F.transform("plist", lambda x: x["docid"]).alias("docids"),
-            F.transform("plist", lambda x: x["tf"]).alias("tfs"),
-            F.transform("plist", lambda x: x["dl"]).alias("dls"),
-            "min_docid",
-            "max_docid",
-            "max_tf",
-            "min_dl",
-        ]
-        if positional:
-            cols.insert(6, F.transform("plist", lambda x: x["positions"]).alias("positions"))
-        postings = agg.select(*cols)
+    blocked = merged.withColumn("block", (F.col("docid") / span).cast("long"))
+    fields = [F.col("docid"), F.col("tf"), F.col("dl")]
+    if positional:
+        fields.append(F.col("positions"))
+    agg = blocked.groupBy("tid", "block").agg(
+        F.sort_array(F.collect_list(F.struct(*fields))).alias("plist"),
+        F.count("*").cast("int").alias("n"),
+        F.min("docid").alias("min_docid"),
+        F.max("docid").alias("max_docid"),
+        F.max("tf").alias("max_tf"),
+        F.min("dl").alias("min_dl"),
+    )
+    cols = [
+        "tid",
+        "block",
+        "n",
+        F.transform("plist", lambda x: x["docid"]).alias("docids"),
+        F.transform("plist", lambda x: x["tf"]).alias("tfs"),
+        F.transform("plist", lambda x: x["dl"]).alias("dls"),
+        "min_docid",
+        "max_docid",
+        "max_tf",
+        "min_dl",
+    ]
+    if positional:
+        cols.insert(6, F.transform("plist", lambda x: x["positions"]).alias("positions"))
+    postings = agg.select(*cols)
 
     n_docs = sum(s.n_docs for s in segments)
     doclens = None

@@ -89,7 +89,6 @@ def champion_index(index: InvertedIndex, n_per_term: int = 128) -> InvertedIndex
         postings=prune_postings(posts, n_per_term),
         positional=False,
         compressed=False,
-        tf=None,
         build_cache=None,
         df_cache=None,
         serving_view=None,

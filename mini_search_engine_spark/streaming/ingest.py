@@ -85,15 +85,10 @@ def ingest_stream(
         if batch_df.isEmpty():
             return
         docs = load_corpus(batch_df)
-        # fused shuffle-free segment build: a micro-batch is small and its
-        # (term, block) split rows union into the segmented index like any
-        # other segment — no exchange per trigger
+        # one segment per micro-batch; its (term, block) split rows union
+        # into the segmented index like any other segment's
         idx = build_index(
-            docs,
-            analyzer=analyzer,
-            positional=positional,
-            block_span=block_span,
-            local_blocks=(analyzer == "porter"),
+            docs, analyzer=analyzer, positional=positional, block_span=block_span
         )
         wrote = write_segment(idx, index_path, str(batch_id))
         idx.unpersist()

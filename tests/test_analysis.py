@@ -171,7 +171,7 @@ def test_java_trim_parity_across_paths(spark):
     dls = {r["docid"]: r["dl"] for r in doc_lengths(docs, "porter").collect()}
     assert dls == {i: len(v) for i, v in exp_toks.items()}
     # fused Arrow build: postings tf per doc must match the stemmed kernel
-    idx = build_index(docs, analyzer="porter", local_blocks=True)
+    idx = build_index(docs, analyzer="porter")
     level = idx.decoded().postings
     got = Counter()
     for r in level.select("docids", "tfs").collect():

@@ -446,3 +446,44 @@ def test_rescore_candidate_broadcast_plan(champ_setup):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_split_block_rows_keep_pruning_exact(spark):
+    """A partition-local build writes a (term, block) whose docs span k
+    input partitions as k rows. With blocks straddling three partitions,
+    block-max pruned BM25 and the champion tier must return exactly the
+    rows of a 1-partition build of the same corpus (one row per key), and
+    the pruned path must equal the exact one."""
+    from pyspark.sql import functions as F
+
+    from mini_search_engine_spark.corpus import synthesize_source_corpus
+
+    docs = load_corpus(
+        synthesize_source_corpus(spark, n_docs=1200, seed=11, num_partitions=4),
+        num_partitions=12,
+    ).persist()
+    span = 300  # ~100 docs per partition → each block straddles 3 partitions
+    split = build_index(docs, analyzer="porter", block_span=span)
+    whole = build_index(docs.coalesce(1), analyzer="porter", block_span=span)
+    keys = split.postings.select("tid", "block").distinct().count()
+    assert split.postings.count() > keys == whole.postings.count()
+    per_key = split.postings.groupBy("tid", "block").count().agg(F.max("count")).first()[0]
+    assert per_key >= 3
+
+    def top(idx, terms, **kw):
+        return [
+            (r["docid"], round(r["score"], 9))
+            for r in bm25_topk(idx, terms, 10, **kw).collect()
+        ]
+
+    pruned = dict(prune=True, prune_min_blocks=1, prune_min_postings=0)
+    for terms in (["spark", "merge"], ["index", "segment", "posting"], ["ident7", "block"]):
+        want = top(whole, terms, **pruned)
+        assert want and top(whole, terms) == want
+        assert top(split, terms, **pruned) == want
+        assert top(split, terms) == want
+        for n in (4, 32):
+            assert top(champion_index(split, n), terms) == top(champion_index(whole, n), terms)
+    split.unpersist(corpus=False)
+    whole.unpersist(corpus=False)
+    docs.unpersist()

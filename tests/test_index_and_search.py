@@ -6,7 +6,12 @@ import math
 
 import pytest
 
-from conftest import postings_with_term
+from conftest import (
+    expected_posting_set,
+    posting_set,
+    postings_with_term,
+    ranged_and_overlapping,
+)
 from mini_search_engine_spark.corpus import load_corpus
 from mini_search_engine_spark.index.build import build_index, read_index, write_index
 from mini_search_engine_spark.search import (
@@ -19,7 +24,7 @@ from mini_search_engine_spark.search import (
     search_phrase,
     search_tfidf,
 )
-from tools.plan_audit import query_exchanges
+from tools.plan_audit import build_exchanges, query_exchanges
 
 
 @pytest.fixture(scope="module")
@@ -38,11 +43,15 @@ def ids(df):
 
 def test_postings_golden(index):
     # "cat" appears in docs 0,2,7; tf 2,1,4 — hand-derived
-    rows = index.decoded().postings.filter("term = 'cat'").collect()
+    rows = postings_with_term(index).filter("term = 'cat'").collect()
     got = sorted((d, t) for r in rows for d, t in zip(r["docids"], r["tfs"]))
     assert got == [(0, 2), (2, 1), (7, 4)]
-    # blocking: docids 0,2 are block 0; docid 7 is block 1 (span 4)
-    assert sorted(r["block"] for r in rows) == [0, 1]
+    # blocking: docids 0,2 are block 0; docid 7 is block 1 (span 4). Docs 0
+    # and 2 sit in different input partitions, so block 0 may be two rows.
+    in_block = {}
+    for r in rows:
+        in_block.setdefault(r["block"], []).extend(r["docids"])
+    assert {b: sorted(d) for b, d in in_block.items()} == {0: [0, 2], 1: [7]}
 
 
 def test_stats(index):
@@ -309,7 +318,7 @@ def test_warm_unpersist_releases_every_cache(spark, warm_pair, tmp_path):
 
 
 def test_warm_df_memo(corpus):
-    """The warm index memoizes per-term dfs driver-side for the scorers
+    """The warm index memoizes per-term dfs plain-Python for the scorers
     that take df as a literal (batch BM25 here): it starts empty, fills on
     use, negative-caches absent terms, answers identically to the cold
     path, and delete_terms drops it so deleted terms cannot resolve from
@@ -378,7 +387,7 @@ def test_bm25_fused_cold_single_job(spark, corpus):
 
 def test_compressed_roundtrip_index(corpus):
     idx = build_index(corpus, analyzer="porter", block_span=4, compress=True)
-    rows = idx.decoded().postings.filter("term = 'cat'").collect()
+    rows = postings_with_term(idx).filter("term = 'cat'").collect()
     got = sorted((d, t) for r in rows for d, t in zip(r["docids"], r["tfs"]))
     assert got == [(0, 2), (2, 1), (7, 4)]
     assert ids(bm25_topk(idx, ["cat"], topk=3)) == [7, 0, 2]
@@ -432,91 +441,57 @@ def test_sha_invariant(corpus, tiny_corpus):
         assert got[r["doc_id"]] == hashlib.sha256(r["text"].encode()).hexdigest()
 
 
-def test_local_blocks_build_matches_default(corpus):
-    """local_blocks=True (partition-local, shuffle-free construction over
-    docid-range partitions) must be posting-identical to the default
-    exchange-based build; blocks straddling partition boundaries may split
-    into multiple rows per (term, block), which every consumer re-aggregates."""
-    from pyspark.sql import functions as F
-
-    ranged = corpus.repartitionByRange(3, "docid")
-    a = build_index(corpus, analyzer="porter", block_span=4, compress=True)
-    b = build_index(ranged, analyzer="porter", block_span=4, compress=True, local_blocks=True)
-
-    def posting_rows(idx):
-        return sorted(
-            (r["term"], r["docid"], r["tf"], r["dl"])
-            for r in postings_with_term(idx)
-            .select(
-                "term", F.explode(F.arrays_zip("docids", "tfs", "dls")).alias("z")
-            )
-            .select(
-                "term",
-                F.col("z.docids").alias("docid"),
-                F.col("z.tfs").alias("tf"),
-                F.col("z.dls").alias("dl"),
-            )
-            .collect()
-        )
-
-    assert posting_rows(a) == posting_rows(b)
+def test_local_blocks_build_matches_default(corpus, tiny_corpus):
+    """A docid-ranged input and the same corpus in overlapping partitions
+    build the same postings — the plain-Python analyzer's — and the same
+    stats and rankings; blocks straddling partition edges may split into
+    several rows per (term, block), which every consumer re-aggregates.
+    The ignored ``local_blocks`` knob changes nothing."""
+    texts = {r["doc_id"]: r["text"] for r in tiny_corpus.collect()}
+    want = expected_posting_set(texts, "porter")
+    ranged, overlapping = ranged_and_overlapping(corpus)
+    a = build_index(ranged, analyzer="porter", block_span=4, compress=True)
+    b = build_index(overlapping, analyzer="porter", block_span=4, compress=True)
+    c = build_index(ranged, analyzer="porter", block_span=4, compress=True, local_blocks=True)
+    assert posting_set(a) == posting_set(b) == posting_set(c) == want
     # stats and a ranked query agree too
-    assert a.n_docs == b.n_docs and a.avgdl == pytest.approx(b.avgdl)
+    assert a.n_docs == b.n_docs == len(texts)
+    assert a.avgdl == pytest.approx(b.avgdl)
+    assert a.avgdl == pytest.approx(sum(p[1] for v in want.values() for p in v) / len(texts))
     dfa = {r["term"]: r["df"] for r in a.termstats.collect()}
     dfb = {r["term"]: r["df"] for r in b.termstats.collect()}
-    assert dfa == dfb
+    assert dfa == dfb == {t: len(v) for t, v in want.items()}
     qa = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(a, ["cat", "dog"], 5).collect()]
     qb = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(b, ["cat", "dog"], 5).collect()]
     assert qa == qb
 
     # flush_rows spill: force multiple emits per partition; split rows per
     # (term, block) must re-aggregate to the identical posting set
-    from mini_search_engine_spark.index.build import _fused_blocked_postings
     from dataclasses import replace
 
+    from mini_search_engine_spark.index.build import _fused_blocked_postings
+
     spilled = _fused_blocked_postings(ranged, block_span=4, compress=True, flush_rows=3)
-    c = replace(b, postings=spilled)
-    assert posting_rows(c) == posting_rows(a)
+    assert posting_set(replace(a, postings=spilled)) == want
+    for idx in (a, b, c):
+        idx.unpersist(corpus=False)
 
 
-def test_local_blocks_positional_matches_default(corpus):
-    """Fused POSITIONAL build: positions (C4-encoded when compressed) and
-    phrase results identical to the exchange build."""
-    from pyspark.sql import functions as F
-
-    ranged = corpus.repartitionByRange(3, "docid")
-    a = build_index(corpus, analyzer="porter", block_span=4, positional=True, compress=True)
-    b = build_index(
-        ranged, analyzer="porter", block_span=4, positional=True, compress=True,
-        local_blocks=True,
-    )
-
-    def pos_rows(idx):
-        return sorted(
-            (r["term"], r["docid"], r["tf"], list(r["positions"]))
-            for r in postings_with_term(idx)
-            .select(
-                "term",
-                F.explode(F.arrays_zip("docids", "tfs", "positions")).alias("z"),
-            )
-            .select(
-                "term",
-                F.col("z.docids").alias("docid"),
-                F.col("z.tfs").alias("tf"),
-                F.col("z.positions").alias("positions"),
-            )
-            .collect()
-        )
-
-    assert pos_rows(b) == pos_rows(a)
-    pa_ = [r["docid"] for r in search_phrase(a, "information retrieval").collect()]
-    pb_ = [r["docid"] for r in search_phrase(b, "information retrieval").collect()]
-    assert pa_ == pb_ and pa_ == [1, 3]
-    # uncompressed positional fused path too
-    c = build_index(
-        ranged, analyzer="porter", block_span=4, positional=True, local_blocks=True
-    )
-    assert pos_rows(c) == pos_rows(a)
+def test_local_blocks_positional_matches_default(corpus, tiny_corpus):
+    """POSITIONAL builds: positions (C4-encoded when compressed) equal the
+    plain-Python analyzed-stream indices on ranged and overlapping input,
+    and phrase results agree."""
+    texts = {r["doc_id"]: r["text"] for r in tiny_corpus.collect()}
+    want = expected_posting_set(texts, "porter", positional=True)
+    ranged, overlapping = ranged_and_overlapping(corpus)
+    built = [
+        build_index(src, analyzer="porter", block_span=4, positional=True, compress=comp)
+        for src in (ranged, overlapping)
+        for comp in (True, False)
+    ]
+    for idx in built:
+        assert posting_set(idx) == want
+        assert [r["docid"] for r in search_phrase(idx, "information retrieval").collect()] == [1, 3]
 
 
 def test_term_filter_pushed_to_parquet_scan(index, tmp_path, spark):
@@ -525,7 +500,7 @@ def test_term_filter_pushed_to_parquet_scan(index, tmp_path, spark):
     predicate reaching the parquet scan (PushedFilters) so row groups are
     pruned before the decode UDF sees a byte. Postings are tid-encoded:
     the pushed filter is an int In/EqualTo on tid (the id is hashed
-    driver-side — no job resolves query terms)."""
+    plain-Python — no job resolves query terms)."""
     from mini_search_engine_spark.index.termid import term_id_py
 
     path = str(tmp_path / "idx_pushdown")
@@ -540,21 +515,31 @@ def test_term_filter_pushed_to_parquet_scan(index, tmp_path, spark):
     ), plan
 
 
-def test_fused_build_plan_has_no_exchange(corpus):
-    """The fused local_blocks plan must contain NO shuffle: content goes in,
-    posting blocks come out of one mapInArrow stage."""
-    from mini_search_engine_spark.index.build import _fused_blocked_postings
+def test_fused_build_plan_has_no_exchange(corpus, tiny_corpus):
+    """The build adds NO shuffle over docid-ranged input — documents go in,
+    posting blocks come out of one mapInArrow stage — and exactly one
+    range exchange on docid over overlapping input; both hold the
+    plain-Python postings."""
+    from mini_search_engine_spark.index.build import _docid_ranged, _fused_blocked_postings
 
-    ranged = corpus.repartitionByRange(3, "docid")
-    plan = (
-        _fused_blocked_postings(ranged, block_span=4, compress=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the only exchange allowed is the caller's own repartitionByRange
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "MapInArrow" in plan
+    def build_plan(docs):
+        src, n_docs = _docid_ranged(docs)
+        assert n_docs == 8
+        # a span no other test builds with: a cached build of the same plan
+        # would stand in for it as one opaque InMemoryTableScan
+        postings = _fused_blocked_postings(src, block_span=3, compress=True)
+        assert "MapInArrow" in postings._jdf.queryExecution().executedPlan().toString()
+        return build_exchanges(postings, docs)
+
+    ranged, overlapping = ranged_and_overlapping(corpus)
+    assert build_plan(ranged) == []
+    added = build_plan(overlapping)
+    assert len(added) == 1 and "rangepartitioning(docid" in added[0], added
+    texts = {r["doc_id"]: r["text"] for r in tiny_corpus.collect()}
+    for src in (ranged, overlapping):
+        idx = build_index(src, analyzer="porter", block_span=4, compress=True)
+        assert posting_set(idx) == expected_posting_set(texts, "porter")
+        idx.unpersist(corpus=False)
 
 
 def test_bm25_plan_has_no_broadcast_exchange(index):
@@ -572,9 +557,10 @@ def test_bm25_plan_has_no_broadcast_exchange(index):
 
 
 def test_null_content_builds_as_empty_doc(spark):
-    """NULL text canonicalizes to an empty document (dl 0, no postings) on
-    BOTH build paths — the reference requires non-null text; the engine
-    degrades gracefully instead of crashing an executor."""
+    """NULL text canonicalizes to an empty document (dl 0, no postings)
+    whether or not the input partitions are docid ranges — the reference
+    requires non-null text; the engine degrades gracefully instead of
+    crashing an executor."""
     rows = [
         (0, "cat dog", "en", "t", 0),
         (1, None, "en", "t", 0),
@@ -585,34 +571,41 @@ def test_null_content_builds_as_empty_doc(spark):
             rows, "doc_id long, text string, lang string, source string, n_chars long"
         )
     )
-    for lb in (False, True):
-        src = docs.repartitionByRange(2, "docid") if lb else docs
-        idx = build_index(src, analyzer="porter", block_span=4, local_blocks=lb)
+    want = expected_posting_set({r[0]: r[1] for r in rows}, "porter")
+    for src in ranged_and_overlapping(docs, 2):
+        idx = build_index(src, analyzer="porter", block_span=4)
         dls = {r["docid"]: r["dl"] for r in idx.doclens.collect()}
         assert dls == {0: 2, 1: 0, 2: 2}
+        assert posting_set(idx) == want
         assert ids(search_keyword(idx, "dog")) == [0, 2]
         assert idx.n_docs == 3
 
 
 def test_local_blocks_non_porter_path(spark):
-    """Non-porter analyzers take the legacy sorted-Arrow local path (the
-    fused kernel is porter-only); posting parity with the exchange build."""
-    rows = [(i, f"alpha beta doc{i % 3}", "en", "t", 0) for i in range(10)]
+    """The Catalyst-tokenized analyzers enter the same fused kernel as a
+    JVM token list: positional postings equal the plain-Python analyzer's
+    on ranged and overlapping input, compressed or not."""
+    texts = {
+        i: f"Alpha beta doc{i % 3}, getUserName" + (" beta_alpha" * (i % 2))
+        for i in range(10)
+    }
     docs = load_corpus(
         spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
+            [(i, t, "en", "t", 0) for i, t in texts.items()],
+            "doc_id long, text string, lang string, source string, n_chars long",
         )
-    ).repartitionByRange(3, "docid")
-    a = build_index(docs, analyzer="naive", block_span=4)
-    b = build_index(docs, analyzer="naive", block_span=4, local_blocks=True)
-
-    def pd_(idx):
-        out = {}
-        for r in postings_with_term(idx).collect():
-            out.setdefault(r["term"], []).extend(zip(r["docids"], r["tfs"]))
-        return {t: sorted(v) for t, v in out.items()}
-
-    assert pd_(a) == pd_(b)
+    )
+    ranged, overlapping = ranged_and_overlapping(docs)
+    for analyzer in ("naive", "punct_nostem", "code"):
+        want = expected_posting_set(texts, analyzer, positional=True)
+        for src, comp in ((ranged, False), (overlapping, True)):
+            idx = build_index(
+                src, analyzer=analyzer, block_span=4, positional=True, compress=comp
+            )
+            assert posting_set(idx) == want, (analyzer, comp)
+            dls = {r["docid"]: r["dl"] for r in idx.doclens.collect()}
+            assert dls == {p[0]: p[2] for v in want.values() for p in v}
+            idx.unpersist(corpus=False)
 
 
 def test_termid_collision_detector(spark, corpus):
@@ -630,24 +623,29 @@ def test_termid_collision_detector(spark, corpus):
     idx.unpersist()
 
 
-def test_fused_term_column_is_sparse(corpus):
+def test_fused_term_column_is_sparse(corpus, tiny_corpus):
     """The fused kernel emits each term string AT MOST once per partition
     (the sparse dictionary column) — string bytes out of the kernel are
     O(vocabulary), not O(posting rows) — while termstats still recovers
-    every term."""
+    every term, with the plain-Python df, on ranged and overlapping input."""
     from pyspark.sql import functions as F
 
-    from mini_search_engine_spark.index.build import _fused_blocked_postings
+    from mini_search_engine_spark.index.build import _docid_ranged, _fused_blocked_postings
 
-    ranged = corpus.repartitionByRange(2, "docid")
-    raw = _fused_blocked_postings(ranged, block_span=2, compress=True)
-    rows = raw.count()
-    nonnull = raw.filter(F.col("term").isNotNull()).count()
-    vocab = raw.select("tid").distinct().count()
-    assert nonnull <= 2 * vocab  # ≤ vocab × n_partitions
-    assert nonnull < rows  # actually sparse (blocks repeat tids)
-    # per (partition-run of) tid the dictionary is complete:
-    assert raw.filter(F.col("term").isNotNull()).select("tid").distinct().count() == vocab
+    texts = {r["doc_id"]: r["text"] for r in tiny_corpus.collect()}
+    want_df = {t: len(v) for t, v in expected_posting_set(texts, "porter").items()}
+    for src in ranged_and_overlapping(corpus, 2):
+        raw = _fused_blocked_postings(_docid_ranged(src)[0], block_span=2, compress=True)
+        rows = raw.count()
+        nonnull = raw.filter(F.col("term").isNotNull()).count()
+        vocab = raw.select("tid").distinct().count()
+        assert nonnull <= 2 * vocab  # ≤ vocab × n_partitions
+        assert nonnull < rows  # actually sparse (blocks repeat tids)
+        # per (partition-run of) tid the dictionary is complete:
+        assert raw.filter(F.col("term").isNotNull()).select("tid").distinct().count() == vocab
+        idx = build_index(src, analyzer="porter", block_span=2, compress=True)
+        assert {r["term"]: r["df"] for r in idx.termstats.collect()} == want_df
+        idx.unpersist(corpus=False)
 
 
 def test_corpus_cache_released_and_docids_deterministic(spark):
@@ -669,7 +667,7 @@ def test_corpus_cache_released_and_docids_deterministic(spark):
         for r in docs.select("repo", "path", "docid").collect()
     }
     assert sorted(ids1.values()) == list(range(300))  # dense 0..N-1
-    idx = build_index(docs, analyzer="porter", block_span=64, local_blocks=True)
+    idx = build_index(docs, analyzer="porter", block_span=64)
     assert idx.n_docs == 300
     assert sc._jsc.getPersistentRDDs().size() > before  # caches live while in use
     idx.unpersist()

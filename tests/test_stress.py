@@ -68,10 +68,14 @@ def test_stress_index_really_on_disk(stress_index):
 def test_hot_term_blocks_bounded(spark):
     """A stopword-grade term (present in EVERY doc) must fan out over
     docid-range blocks — no posting row may exceed the block span, which
-    is the skew bound that keeps reducers and writers balanced at scale."""
+    is the skew bound that keeps reducers and writers balanced at scale.
+    The partition-local build writes one row per (input partition, block)
+    the term occurs in, and the rows hold every posting exactly once."""
+    from conftest import ranged_and_overlapping
     from mini_search_engine_spark.corpus import load_corpus
     from pyspark.sql import functions as F
 
+    from mini_search_engine_spark.index.build import _docid_ranged
     from mini_search_engine_spark.index.termid import term_id_py
 
     n = 2000
@@ -82,28 +86,25 @@ def test_hot_term_blocks_bounded(spark):
         )
     )
     span = 256
-    idx = build_index(docs, analyzer="porter", block_span=span)
-    sizes = (
-        idx.postings.filter(F.col("tid") == term_id_py("hot"))
-        .select(F.size("docids").alias("sz"))
-        .collect()
-    )
-    assert len(sizes) == n // span + (1 if n % span else 0)
-    assert all(r["sz"] <= span for r in sizes)
-    # fused path obeys the same bound
-    idx2 = build_index(
-        docs.repartitionByRange(4, "docid"),
-        analyzer="porter",
-        block_span=span,
-        local_blocks=True,
-    )
-    sizes2 = (
-        idx2.postings.filter(F.col("tid") == term_id_py("hot"))
-        .select(F.size("docids").alias("sz"))
-        .collect()
-    )
-    assert all(r["sz"] <= span for r in sizes2)
-    assert sum(r["sz"] for r in sizes2) == n
+    # the input as built (ranged), range-repartitioned, and in partitions
+    # overlapping in docid that the build must range itself
+    for src in (docs, *ranged_and_overlapping(docs, 4)):
+        idx = build_index(src, analyzer="porter", block_span=span)
+        hot = idx.postings.filter(F.col("tid") == term_id_py("hot"))
+        sizes = hot.select("block", F.size("docids").alias("sz")).collect()
+        assert {r["block"] for r in sizes} == set(range(n // span + (1 if n % span else 0)))
+        assert all(r["sz"] <= span for r in sizes)
+        assert sum(r["sz"] for r in sizes) == n
+        built_from = _docid_ranged(src)[0]
+        pieces = (
+            built_from.select(
+                F.spark_partition_id().alias("p"), (F.col("docid") / span).cast("long").alias("b")
+            )
+            .distinct()
+            .count()
+        )
+        assert len(sizes) == pieces
+        idx.unpersist(corpus=False)
 
 
 def test_empty_corpus_builds_and_queries(spark):

@@ -26,10 +26,6 @@ def main():
     corpus_path = sys.argv[1]
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     positional = os.environ.get("SPARK_GRAFT_POSITIONAL", "0") == "1"
-    # fused shuffle-free construction over the range-partitioned input
-    # (load_corpus(num_partitions=...) guarantees contiguous docid ranges);
-    # SPARK_GRAFT_LOCAL_BLOCKS=0 benches the exchange path instead
-    local_blocks = os.environ.get("SPARK_GRAFT_LOCAL_BLOCKS", "1") == "1"
     os.makedirs("/dev/shm/spark-local", exist_ok=True)
     spark = get_spark(
         app_name=f"mse-build-bench-{cpus}",
@@ -43,8 +39,8 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     # load_corpus(num_partitions=2×cores) hash-partitions on (repo, path)
     # while assigning ids — each partition is a contiguous docid range, which is
-    # what lets build_index(local_blocks=True) construct every posting
-    # block map-side with NO wide shuffle. (On a real cluster the input
+    # what lets build_index construct every posting block map-side with NO
+    # wide shuffle. (On a real cluster the input
     # arrives pre-split; 2×cores keeps the analyzer UDF saturated here.)
     docs = load_corpus(spark.read.parquet(corpus_path), num_partitions=cpus * 2).cache()
     n_files = docs.count()
@@ -62,7 +58,7 @@ def main():
     # report the median — this VM's wall times jitter up to 2× run-to-run
     # at full core saturation even for identical pure-JVM jobs.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    warm = build_index(docs, analyzer="porter", positional=positional, compress=True, local_blocks=local_blocks, check_tid_collisions=False)
+    warm = build_index(docs, analyzer="porter", positional=positional, compress=True, check_tid_collisions=False)
     write_index(warm, idx_path)
     warm.unpersist()
 
@@ -71,7 +67,7 @@ def main():
         shutil.rmtree(idx_path, ignore_errors=True)
         t0 = time.time()
         # check gated off: keeps the timed protocol identical to rounds 1-3
-        idx = build_index(docs, analyzer="porter", positional=positional, compress=True, local_blocks=local_blocks, check_tid_collisions=False)
+        idx = build_index(docs, analyzer="porter", positional=positional, compress=True, check_tid_collisions=False)
         write_index(idx, idx_path)
         times.append(time.time() - t0)
         if _ < reps - 1:

@@ -68,9 +68,7 @@ def main():
     docs = docs.persist()
     docs.count()
 
-    idx = build_index(
-        docs, analyzer="porter", compress=True, local_blocks=True
-    )
+    idx = build_index(docs, analyzer="porter", compress=True)
     dict_df = F.broadcast(idx.termstats.select("tid", "term"))
     legacy = idx.postings.join(dict_df, "tid").drop("tid")  # r2 layout: term strings
 

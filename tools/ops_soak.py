@@ -106,7 +106,7 @@ def main():
     ranged = docs.repartitionByRange(cpus, "docid").persist()
     ranged.count()
     t0 = time.time()
-    idx = build_index(ranged, analyzer="porter", positional=False, local_blocks=True)
+    idx = build_index(ranged, analyzer="porter", positional=False)
     idx.postings.count()
     out["index_build_sec"] = round(time.time() - t0, 2)
     t0 = time.time()

@@ -28,14 +28,15 @@ def final_plan(df) -> str:
 
 def query_exchanges(df) -> list[str]:
     """Exchange nodes of ``df``'s executed plan (final once it has run),
-    not counting the plan of a cached relation it scans (a warm index's
-    layout was range-partitioned once, at warm time)."""
+    each as ``"<node name> <output partitioning>"``, not counting the plan
+    of a cached relation it scans (a warm index's layout was
+    range-partitioned once, at warm time)."""
     found = []
 
     def walk(node):
         kind = node.getClass().getSimpleName()
         if "Exchange" in node.nodeName():
-            found.append(node.nodeName())
+            found.append(f"{node.nodeName()} {node.outputPartitioning().toString()}")
         if kind == "AdaptiveSparkPlanExec":
             return walk(node.executedPlan())
         if kind.endswith("QueryStageExec"):
@@ -46,6 +47,16 @@ def query_exchanges(df) -> list[str]:
 
     walk(df._jdf.queryExecution().executedPlan())
     return found
+
+
+def build_exchanges(postings, docs) -> list[str]:
+    """The exchanges ``postings``' plan adds above those of ``docs``, its
+    input corpus."""
+    added = query_exchanges(postings)
+    for ex in query_exchanges(docs):
+        if ex in added:
+            added.remove(ex)
+    return added
 
 
 def audit(sf_dir: str) -> list[dict]:
@@ -256,6 +267,43 @@ def audit(sf_dir: str) -> list[dict]:
         )
         print(("OK  " if not ex else "FAIL") + f" {name}")
     warm.unpersist()
+
+    # 10. index build: the postings plan build_index persists adds no
+    #     exchange over docid-ranged input (load_corpus with
+    #     num_partitions; persisted, so its own range exchange sits inside
+    #     the cache) and exactly one range exchange on docid over
+    #     round-robin partitions, whose docid intervals overlap.
+    from mini_search_engine_spark.corpus import load_corpus
+    from mini_search_engine_spark.index.build import _docid_ranged, _fused_blocked_postings
+
+    raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    ranged = load_corpus(raw, num_partitions=4).persist()
+    unranged = load_corpus(raw).persist()
+    for name, corpus, label, want in (
+        ("build_ranged", ranged, "Exchange added by the build", []),
+        (
+            "build_unranged",
+            unranged.repartition(4),
+            "one range Exchange on docid added by the build",
+            ["rangepartitioning(docid"],
+        ),
+    ):
+        postings = _fused_blocked_postings(_docid_ranged(corpus)[0], 64, compress=True)
+        postings.collect()  # finalize AQE
+        added = build_exchanges(postings, corpus)
+        ok = len(added) == len(want) and all(w in e for w, e in zip(want, added))
+        checks.append(
+            {
+                "op": name,
+                "ok": ok,
+                "patterns": {label: {"expected": bool(want), "present": ok if want else bool(added)}},
+                "notes": "postings plan build_index persists, over "
+                + ("load_corpus(num_partitions=4) output" if not want else "round-robin partitions"),
+            }
+        )
+        print(("OK  " if ok else "FAIL") + f" {name}")
+    ranged.unpersist()
+    unranged.unpersist()
 
     spark.stop()
     return checks

@@ -163,9 +163,7 @@ def main():
     docs = load_corpus(
         synthesize_source_corpus(spark, n_docs=n_docs, seed=42, num_partitions=cpus)
     ).repartitionByRange(cpus, "docid")
-    idx = build_index(
-        docs, analyzer="porter", compress=True, local_blocks=True
-    ).warm()
+    idx = build_index(docs, analyzer="porter", compress=True).warm()
     mix = build_query_mix(idx)
     if mix_kind == "bm25":  # every entry BM25: the facade's target traffic
         mix = [m for m in mix if m[0] == "bm25"] * 4

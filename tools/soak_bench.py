@@ -183,9 +183,7 @@ def main():
 
     idx_path = f"/tmp/mse_soak_index_{n_docs}"
     t0 = time.time()
-    idx = build_index(
-        docs, analyzer="porter", positional=True, compress=True, local_blocks=True
-    )
+    idx = build_index(docs, analyzer="porter", positional=True, compress=True)
     write_index(idx, idx_path)
     out["build_sec"] = round(time.time() - t0, 1)
     out["files_per_sec"] = round(n_docs / out["build_sec"], 1)

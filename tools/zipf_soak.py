@@ -55,9 +55,7 @@ def main():
     docs = load_corpus(spark.read.parquet(f"{root}/corpus"))
 
     # df shape evidence: how skewed did we get?
-    idx = build_index(
-        docs.repartitionByRange(cpus, "docid"), analyzer="porter", local_blocks=True
-    )
+    idx = build_index(docs.repartitionByRange(cpus, "docid"), analyzer="porter")
     stats = idx.termstats
     row = stats.agg(
         F.count("*").alias("vocab"),
