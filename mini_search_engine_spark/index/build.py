@@ -60,6 +60,39 @@ from mini_search_engine_spark.index import compress as C
 
 DEFAULT_BLOCK_SPAN = 1 << 16  # docids per block
 
+# The sidecar schemas every index writer emits and every reader declares:
+# a parquet read without a schema runs a footer-inference job.
+DOCLENS_SCHEMA = "docid long, dl int"
+TERMSTATS_SCHEMA = "term string, tid long, df long"
+
+
+def postings_schema(compressed: bool, positional: bool, term: bool = False) -> T.StructType:
+    """The postings columns in file order, as the build kernel, merge,
+    champion pruning and deletes all write them: ``tid, block, n``, the
+    posting arrays (or their codec bytes), the block-max stats. ``term``
+    adds the build kernel's sparse dictionary column after ``tid``."""
+    long_, int_ = T.LongType(), T.IntegerType()
+
+    def col(name, typ, nullable=False):
+        return T.StructField(name, typ, nullable)
+
+    if compressed:
+        names = ["docids_bytes", "tfs_bytes", "dls_bytes"] + ["positions_bytes"] * positional
+        data = [col(c, T.BinaryType()) for c in names]
+    else:
+        data = [
+            col("docids", T.ArrayType(long_)),
+            col("tfs", T.ArrayType(int_)),
+            col("dls", T.ArrayType(int_)),
+        ] + [col("positions", T.ArrayType(T.ArrayType(int_)))] * positional
+    return T.StructType(
+        [col("tid", long_)]
+        + [col("term", T.StringType(), True)] * term
+        + [col("block", long_), col("n", int_)]
+        + data
+        + [col("min_docid", long_), col("max_docid", long_), col("max_tf", int_), col("min_dl", int_)]
+    )
+
 
 @dataclass
 class InvertedIndex:
@@ -206,10 +239,14 @@ class InvertedIndex:
         block that orders by ``(block, docid)``: a subquery re-qualifies
         ``block`` and the planner no longer matches it to the cached
         range partitioning. Any other index substitutes its tid-filtered,
-        decoded postings, with ``df`` (tid → df from the termstats probe)
-        folded in as a literal ``CASE`` column when given: the same plan
-        at the cost of a non-warm scan. Only numbers reach the SQL text:
-        term ids are hashed on the driver."""
+        decoded postings. ``df`` has three sources: stamped by ``warm()``;
+        on complete postings (neither warm nor ``pruned``) ``sum(n) OVER
+        (PARTITION BY tid)`` in the plan, deletes applied — the termstats
+        df with no probe job, and pruned away from templates that never
+        read it; on ``pruned`` tiers, whose Σ n undercounts, the ``df``
+        argument (tid → df from the termstats probe) as a literal
+        ``CASE``. Only numbers reach the SQL text: term ids are hashed on
+        the driver."""
         spark = self.postings.sparkSession
         in_list = f"({', '.join(f'{int(t)}L' for t in tids)})"
         if self.serving_view is not None:
@@ -218,10 +255,13 @@ class InvertedIndex:
             text = sql.format(postings=self.serving_view, tids=in_list, **params)
             return spark.sql(text, args={})
         p = self.postings.filter(f"tid IN {in_list}")
-        p = replace(self, postings=p).decoded().postings
         if df is not None:
             arms = " ".join(f"WHEN {int(t)}L THEN {int(d)}L" for t, d in df.items())
             p = p.withColumn("df", F.expr(f"CASE tid {arms} END"))
+        else:
+            # before the decode: the window's tid exchange moves codec bytes
+            p = p.withColumn("df", F.expr("sum(n) OVER (PARTITION BY tid)"))
+        p = replace(self, postings=p).decoded().postings
         # pyspark binds the DataFrame to a temporary view for this call only
         text = sql.format(postings="{postings}", tids=in_list, **params)
         return spark.sql(text, postings=p)
@@ -521,46 +561,11 @@ def _fused_blocked_postings(
     rows, not OOM.
     """
     src, mode, wb = _token_source(docs, analyzer)
-    out_fields = [
-        T.StructField("tid", T.LongType(), False),
-        # SPARSE dictionary column: the term string appears on the FIRST
-        # (tid → term) row each partition emits and is null elsewhere, so
-        # string bytes leaving the kernel are O(partition vocabulary), not
-        # O(posting rows); termstats min(term) recovers the dictionary.
-        T.StructField("term", T.StringType(), True),
-        T.StructField("block", T.LongType(), False),
-        T.StructField("n", T.IntegerType(), False),
-    ]
-    if compress:
-        data_fields = [
-            T.StructField("docids_bytes", T.BinaryType(), False),
-            T.StructField("tfs_bytes", T.BinaryType(), False),
-            T.StructField("dls_bytes", T.BinaryType(), False),
-        ]
-        if positional:
-            data_fields.append(T.StructField("positions_bytes", T.BinaryType(), False))
-    else:
-        data_fields = [
-            T.StructField("docids", T.ArrayType(T.LongType()), False),
-            T.StructField("tfs", T.ArrayType(T.IntegerType()), False),
-            T.StructField("dls", T.ArrayType(T.IntegerType()), False),
-        ]
-        if positional:
-            data_fields.append(
-                T.StructField(
-                    "positions", T.ArrayType(T.ArrayType(T.IntegerType())), False
-                )
-            )
-    schema = T.StructType(
-        out_fields
-        + data_fields
-        + [
-            T.StructField("min_docid", T.LongType(), False),
-            T.StructField("max_docid", T.LongType(), False),
-            T.StructField("max_tf", T.IntegerType(), False),
-            T.StructField("min_dl", T.IntegerType(), False),
-        ]
-    )
+    # the term column is a SPARSE dictionary: the string appears on the
+    # FIRST (tid → term) row each partition emits and is null elsewhere, so
+    # string bytes leaving the kernel are O(partition vocabulary), not
+    # O(posting rows); termstats min(term) recovers the dictionary.
+    schema = postings_schema(compress, positional, term=True)
 
     def fused(batches):
         from mini_search_engine_spark.index.termid import term_id_py
@@ -682,6 +687,12 @@ def _termstats_of(postings_with_term: DataFrame) -> DataFrame:
         .agg(F.sum("n").cast("long").alias("df"), F.min("term").alias("term"))
         .select("term", "tid", "df")
     )
+
+
+def doc_stats(doclens: DataFrame) -> tuple[int, float]:
+    """(n_docs, avgdl) of a doclens frame: one small aggregate."""
+    row = doclens.agg(F.count("*"), F.avg("dl")).collect()[0]
+    return int(row[0]), float(row[1] or 0.0)
 
 
 def _docid_ranged(docs: DataFrame) -> tuple[DataFrame, int]:
@@ -884,10 +895,11 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
         meta = _json.loads(raw)
     else:  # indexes written by older builds / lineage finalize
         meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
+    schema = postings_schema(meta["compressed"], meta["positional"])
     return InvertedIndex(
-        postings=spark.read.parquet(f"{path}/postings"),
-        doclens=spark.read.parquet(f"{path}/doclens"),
-        termstats=spark.read.parquet(f"{path}/termstats"),
+        postings=spark.read.schema(schema).parquet(f"{path}/postings"),
+        doclens=spark.read.schema(DOCLENS_SCHEMA).parquet(f"{path}/doclens"),
+        termstats=spark.read.schema(TERMSTATS_SCHEMA).parquet(f"{path}/termstats"),
         n_docs=meta["n_docs"],
         avgdl=meta["avgdl"],
         analyzer=meta["analyzer"],

@@ -37,6 +37,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from mini_search_engine_spark.index.build import (
+    TERMSTATS_SCHEMA,
     InvertedIndex,
     _hadoop_fs,
     read_index,
@@ -158,9 +159,8 @@ def refresh_champion(
     if mode == "incremental":
         new_segs = sorted(set(snap.segments) - set(prev_meta["segments"]))
         changed = (
-            spark.read.parquet(
-                *[f"{index_path}/segments/seg={s}/termstats" for s in new_segs]
-            )
+            spark.read.schema(TERMSTATS_SCHEMA)
+            .parquet(*[f"{index_path}/segments/seg={s}/termstats" for s in new_segs])
             .select("tid")
             .distinct()
         )

@@ -8,127 +8,91 @@ the Iceberg equality-delete analog over our postings layout:
 
 * a tombstone set is a plain ``docid`` DataFrame (a delete *file* once
   persisted — see streaming/ingest.delete_docs);
-* postings blocks are docid-range aligned (``block = docid //
-  block_span``), so tombstones map to exactly the blocks they touch —
-  the rewrite joins per-BLOCK tombstone arrays against postings and
-  positionally filters the parallel arrays (docids/tfs/dls[/positions])
-  in pure Catalyst. Blocks with no tombstone pass through untouched; at
-  realistic delete rates (≪1% of docs) that is almost all of them, and
-  the block filter is pushed to the parquet scan.
+* its distinct docids enter the postings and doclens plans as SQL ``IN``
+  literals (past 10 values a hash ``InSet``): no join, no broadcast.
+  Postings blocks are docid-range aligned (``block = docid //
+  block_span``), so the tombstones name exactly the blocks they touch;
+  only those rows get their parallel arrays (docids/tfs/dls[/positions])
+  positionally filtered, in pure Catalyst. At realistic delete rates
+  (≪1% of docs) almost every block passes through untouched.
 * term/doc statistics stay EXACT: per-tid df deltas are computed from the
-  affected rows only, doc count and avgdl from the filtered doclens —
+  touched blocks only, doc count and avgdl from the filtered doclens —
   BM25 over the merged view is identical to a from-scratch build on the
   surviving documents (asserted in tests/test_deletes.py).
 
 Merge-on-read is the serving path; compaction (streaming/ingest.
 maybe_compact) physically drops tombstoned postings because it merges the
-ALREADY-FILTERED view, after which the snapshot carries no delete files.
+ALREADY-FILTERED view, after which the snapshot carries no delete files:
+that bounds the literal set.
 """
 
 from __future__ import annotations
 
 from dataclasses import replace
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mini_search_engine_spark.index.build import InvertedIndex
+from mini_search_engine_spark.index.build import InvertedIndex, doc_stats
 
-# tombstoned block ids are inlined as a parquet-pushable IN filter up to
-# this many; beyond it the per-block join alone prunes (same bound/pattern
-# as search/ranking.py's block-prefix pushdown)
-MAX_INLINE_BLOCKS = 8192
+# the schema of a delete file
+TOMBSTONE_SCHEMA = "docid long"
 
 
-def _mask_keep(arr: Column, mask: Column) -> Column:
-    """Positional filter: keep ``arr[i]`` where ``mask[i]`` (0-based)."""
-    return F.filter(arr, lambda _, i: F.get(mask, i))
+def _in(col: str, values: list[int]) -> str:
+    """SQL text ``col IN (v, …)`` — ``false`` for no values."""
+    if not values:
+        return "false"
+    return f"{col} IN ({', '.join(f'{v}L' for v in values)})"
 
 
 def apply_deletes(index: InvertedIndex, tombstones: DataFrame) -> InvertedIndex:
     """Return a view of ``index`` with every docid in ``tombstones``
-    removed, statistics exact. Lazy — no job runs until the result is
-    queried, except one small agg recomputing (n_docs, avgdl).
+    removed, statistics exact. Two small jobs run here: one collects the
+    tombstone docids, one takes (n_docs, avgdl) from the surviving doclens
+    (the input's are not read). The rewrite is SQL text, so its Py4J cost
+    does not grow with the number of tombstones.
 
     ``tombstones``: any DataFrame with a ``docid`` column (deleting a
-    docid that does not exist is a no-op). The input index must be
-    uncompressed (serving indexes are — ``decoded()``/``warm()`` first)."""
+    docid that does not exist is a no-op). A compressed input is decoded
+    first."""
     if index.compressed:
         index = index.decoded()
-    tomb = tombstones.select("docid").distinct()
-
-    # per-block tombstone arrays: |deletes|/span rows, broadcast to the join
-    tomb_blocks = (
-        tomb.withColumn("block", (F.col("docid") / index.block_span).cast("long"))
-        .groupBy("block")
-        .agg(F.collect_set("docid").alias("_tomb"))
-    )
-    block_ids = [r["block"] for r in tomb_blocks.select("block").limit(MAX_INLINE_BLOCKS + 1).collect()]
-    inline = len(block_ids) <= MAX_INLINE_BLOCKS
+    ids = sorted({int(r[0]) for r in tombstones.select("docid").collect()})
+    touched_blocks = _in("block", sorted({d // index.block_span for d in ids}))
 
     # a warm index's stamped df would go stale: drop it, and its serving
-    # view below; the result takes df from the rewritten termstats
+    # view below; the result takes df from the rewritten termstats.
+    # _mask[i] says docids[i] survives; it is NULL outside touched blocks.
     p = index.postings.drop("df")
-    positional = "positions" in p.columns
-    joined = p.join(F.broadcast(tomb_blocks), "block", "left")
-    mask = F.transform(F.col("docids"), lambda d: ~F.array_contains(F.col("_tomb"), d))
-    touched = F.col("_tomb").isNotNull() & F.array_contains(mask, False)
+    masked = p.selectExpr(
+        "*", f"CASE WHEN {touched_blocks} THEN transform(docids, d -> NOT {_in('d', ids)}) END AS _mask"
+    )
+    touched = "array_contains(_mask, false)"
 
-    new_docids = F.when(touched, _mask_keep(F.col("docids"), mask)).otherwise(F.col("docids"))
-    cleaned = joined.withColumn("_mask", mask).withColumn("_new_docids", new_docids)
-    cleaned = cleaned.filter(F.size("_new_docids") > 0)
+    def kept(arr: str) -> str:
+        return f"CASE WHEN {touched} THEN filter({arr}, (x, i) -> _mask[i]) ELSE {arr} END"
 
-    def rewritten(col: str) -> Column:
-        return F.when(touched, _mask_keep(F.col(col), F.col("_mask"))).otherwise(F.col(col))
+    masked = masked.selectExpr("*", f"{kept('docids')} AS _new_docids")
+    rewritten = {
+        "docids": "_new_docids",
+        "n": "size(_new_docids)",
+        "min_docid": f"CASE WHEN {touched} THEN element_at(_new_docids, 1) ELSE min_docid END",
+        "max_docid": f"CASE WHEN {touched} THEN element_at(_new_docids, -1) ELSE max_docid END",
+        "max_tf": f"CASE WHEN {touched} THEN array_max({kept('tfs')}) ELSE max_tf END",
+        "min_dl": f"CASE WHEN {touched} THEN array_min({kept('dls')}) ELSE min_dl END",
+        **{arr: kept(arr) for arr in ("tfs", "dls", "positions")},
+    }
+    new_postings = masked.filter("size(_new_docids) > 0").selectExpr(
+        *[f"{rewritten.get(c, c)} AS {c}" for c in p.columns]
+    )
 
-    arr_cols = {"tfs": rewritten("tfs"), "dls": rewritten("dls")}
-    if positional:
-        arr_cols["positions"] = rewritten("positions")
-    out_cols = []
-    for c in p.columns:
-        if c == "docids":
-            out_cols.append(F.col("_new_docids").alias("docids"))
-        elif c in arr_cols:
-            out_cols.append(arr_cols[c].alias(c))
-        elif c == "n":
-            out_cols.append(F.size("_new_docids").alias("n"))
-        elif c == "min_docid":
-            out_cols.append(
-                F.when(touched, F.element_at("_new_docids", 1))
-                .otherwise(F.col("min_docid")).alias("min_docid")
-            )
-        elif c == "max_docid":
-            out_cols.append(
-                F.when(touched, F.element_at("_new_docids", -1))
-                .otherwise(F.col("max_docid")).alias("max_docid")
-            )
-        elif c == "max_tf":
-            out_cols.append(
-                F.when(touched, F.array_max(arr_cols["tfs"]))
-                .otherwise(F.col("max_tf")).alias("max_tf")
-            )
-        elif c == "min_dl":
-            out_cols.append(
-                F.when(touched, F.array_min(arr_cols["dls"]))
-                .otherwise(F.col("min_dl")).alias("min_dl")
-            )
-        else:
-            out_cols.append(F.col(c))
-    new_postings = cleaned.select(*out_cols)
-
-    # exact df deltas from the AFFECTED blocks only — the block filter is
-    # pushed to the parquet scan, so a df lookup on an untouched term never
-    # reads untouched row groups
-    affected = p.join(F.broadcast(tomb_blocks), "block", "inner")
-    if inline and block_ids:
-        affected = affected.filter(F.col("block").isin(block_ids))
-    amask = F.transform(F.col("docids"), lambda d: ~F.array_contains(F.col("_tomb"), d))
+    # exact df deltas from the touched blocks only — the block filter is
+    # pushed to the parquet scan, so untouched row groups are never read
     deltas = (
-        affected.select(
-            "tid",
-            (F.size("docids") - F.size(F.filter(amask, lambda m: m))).alias("_deleted"),
-        )
-        .filter(F.col("_deleted") > 0)
+        masked.filter(touched_blocks)
+        .selectExpr("tid", "size(docids) - size(_new_docids) AS _deleted")
+        .filter("_deleted > 0")
         .groupBy("tid")
         .agg(F.sum("_deleted").alias("_deleted"))
     )
@@ -139,16 +103,16 @@ def apply_deletes(index: InvertedIndex, tombstones: DataFrame) -> InvertedIndex:
         .select(*index.termstats.columns)
     )
 
-    new_doclens = index.doclens.join(F.broadcast(tomb), "docid", "left_anti")
-    stats = new_doclens.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
+    new_doclens = index.doclens.filter(f"NOT {_in('docid', ids)}")
+    n_docs, avgdl = doc_stats(new_doclens)
 
     return replace(
         index,
         postings=new_postings,
         doclens=new_doclens,
         termstats=new_termstats,
-        n_docs=int(stats["n"]),
-        avgdl=float(stats["avgdl"] or 0.0),
+        n_docs=n_docs,
+        avgdl=avgdl,
         # views over rewritten frames own no caches of their own
         build_cache=None,
         corpus_cache=index.corpus_cache,

@@ -35,8 +35,12 @@ from pyspark.sql import functions as F
 
 from mini_search_engine_spark.index.build import (
     DEFAULT_BLOCK_SPAN,
+    DOCLENS_SCHEMA,
+    TERMSTATS_SCHEMA,
     InvertedIndex,
     build_index,
+    doc_stats,
+    postings_schema,
     read_index,
 )
 
@@ -213,12 +217,12 @@ def finalize_index(
     alike and their posting lists silently merged — raise instead."""
     from mini_search_engine_spark.index.termid import assert_no_tid_collisions
 
-    postings = spark.read.parquet(f"{path}/postings")
-    doclens = spark.read.parquet(f"{path}/doclens")
+    postings = spark.read.schema(postings_schema(compress, positional)).parquet(f"{path}/postings")
+    doclens = spark.read.schema(DOCLENS_SCHEMA).parquet(f"{path}/doclens")
     # global dictionary: re-agg the per-part sidecars — parts are disjoint
     # docid ranges so per-part dfs sum; identical terms hash to identical
     # tids across parts (no remapping)
-    raw_parts = spark.read.parquet(f"{path}/termstats_parts")
+    raw_parts = spark.read.schema(TERMSTATS_SCHEMA).parquet(f"{path}/termstats_parts")
     # detector runs on the RAW per-part union (the groupBy below collapses
     # to one min(term) row per tid, which would blind it)
     assert_no_tid_collisions(raw_parts.select("term", "tid"))
@@ -227,13 +231,13 @@ def finalize_index(
         .agg(F.sum("df").cast("long").alias("df"), F.min("term").alias("term"))
         .select("term", "tid", "df")
     )
-    stats = doclens.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
+    n_docs, avgdl = doc_stats(doclens)
     idx = InvertedIndex(
         postings=postings,
         doclens=doclens,
         termstats=termstats,
-        n_docs=int(stats["n"]),
-        avgdl=float(stats["avgdl"] or 0.0),
+        n_docs=n_docs,
+        avgdl=avgdl,
         analyzer=analyzer,
         block_span=block_span,
         positional=positional,

@@ -15,9 +15,12 @@ BM25 (north_star, k1=1.2 b=0.75) uses the Lucene/ATIRE idf
 ``tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl))``; doc length comes from the ``dls``
 array denormalized into the postings at build time, so the only query-time
 state is per-term df — no join against a doc-stats table. Both scorers are
-one SQL text each (``InvertedIndex.query``): on a warm index df is read
-from the column ``warm()`` stamped onto the postings and the query is one
-Spark job; otherwise it is a literal ``CASE`` from the termstats probe.
+one SQL text each (``InvertedIndex.query``), reading df from one of three
+sources: on a warm index the column ``warm()`` stamped onto the postings
+(the query is one Spark job); on complete postings (a built, read or
+segmented index, deletes applied) ``sum(n) OVER (PARTITION BY tid)`` in
+the same plan; on a ``pruned`` champion tier, whose postings undercount
+df, a literal ``CASE`` from the termstats probe.
 
 Block-max pruning (``bm25_topk(prune=True)``): blocks are docid-range
 aligned ACROSS terms (build.py), so for a range r the upper bound
@@ -107,10 +110,11 @@ def _scored_terms(
     index: InvertedIndex, terms: list[str]
 ) -> tuple[dict[int, str], dict[int, int] | None]:
     """tid → term for the analyzed query ``terms`` worth scanning, plus the
-    df source ``InvertedIndex.query`` needs. A warm index's rows carry df
-    (``None``: no probe, and absent terms simply match no rows); any other
-    index probes termstats (``_df_map``) and scans only the terms found."""
-    if index.serving_view is not None:
+    df literal ``InvertedIndex.query`` needs. A warm index's rows carry df
+    and complete postings yield it in the plan (``None``: no probe, and
+    absent terms simply match no rows); only a ``pruned`` tier probes
+    termstats (``_df_map``) and scans the terms found."""
+    if index.serving_view is not None or not index.pruned:
         return {term_id_py(t): t for t in terms}, None
     dfm = _df_map(index, terms)
     by_tid = {term_id_py(t): t for t in terms if dfm.get(t)}

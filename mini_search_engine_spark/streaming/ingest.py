@@ -16,19 +16,24 @@ the reference's merge.
 
 from __future__ import annotations
 
+import time
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-import time
 
 from mini_search_engine_spark.corpus import load_corpus
 from mini_search_engine_spark.index.build import (
     DEFAULT_BLOCK_SPAN,
+    DOCLENS_SCHEMA,
+    TERMSTATS_SCHEMA,
     InvertedIndex,
     build_index,
+    doc_stats,
+    postings_schema,
     _hadoop_fs,
 )
-from mini_search_engine_spark.index.deletes import apply_deletes
+from mini_search_engine_spark.index.deletes import TOMBSTONE_SCHEMA, apply_deletes
 from mini_search_engine_spark.index.merge import merge_segments
 from mini_search_engine_spark.streaming.snapshots import (
     Snapshot,
@@ -283,7 +288,13 @@ def read_segmented_index(
     that snapshot committed — its segment list AND its tombstone set
     (within ``gc``'s retention window, like Iceberg's ``VERSION AS OF``).
     ``apply_tombstones=False`` skips merge-on-read delete filtering (used
-    by audits that must see tombstoned postings)."""
+    by audits that must see tombstoned postings).
+
+    The snapshot's merge-on-read state is resolved here, once: every file
+    is read with its declared schema (no inference job; ``positional``
+    must match the segments), and ``apply_deletes`` writes the tombstones
+    into the plans as literals. Opening runs the tombstone collect and the
+    (n_docs, avgdl) aggregate; a query then runs only its own plan."""
     del_files: list[str] = []
     if snapshot_id is not None:
         snap = read_snapshot(spark, index_path, snapshot_id)
@@ -303,32 +314,46 @@ def read_segmented_index(
     if not segs:
         raise FileNotFoundError(f"no live segments under {index_path}/segments")
     seg_bases = [f"{index_path}/segments/seg={s}" for s in segs]
-    postings = spark.read.parquet(*[f"{b}/postings" for b in seg_bases])
-    doclens = spark.read.parquet(*[f"{b}/doclens" for b in seg_bases])
+
+    def read(schema, part: str) -> DataFrame:
+        return spark.read.schema(schema).parquet(*[f"{b}/{part}" for b in seg_bases])
+
     # per-segment dfs sum (docids are globally unique across segments);
     # hashed tids agree across independently built segments by construction
     termstats = (
-        spark.read.parquet(*[f"{b}/termstats" for b in seg_bases])
+        read(TERMSTATS_SCHEMA, "termstats")
         .groupBy("tid")
         .agg(F.sum("df").cast("long").alias("df"), F.min("term").alias("term"))
         .select("term", "tid", "df")
     )
-    stats = doclens.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
     idx = InvertedIndex(
-        postings=postings,
-        doclens=doclens,
+        postings=read(postings_schema(False, positional), "postings"),
+        doclens=read(DOCLENS_SCHEMA, "doclens"),
         termstats=termstats,
-        n_docs=int(stats["n"]),
-        avgdl=float(stats["avgdl"] or 0.0),
+        n_docs=0,
+        avgdl=0.0,
         analyzer=analyzer,
         block_span=block_span,
         positional=positional,
         compressed=False,
     )
     if apply_tombstones and del_files:
-        tomb = spark.read.parquet(*[f"{index_path}/deletes/{f}" for f in del_files])
-        idx = apply_deletes(idx, tomb)
-    return idx
+        # apply_deletes takes n_docs and avgdl from the surviving doclens
+        deletes = [f"{index_path}/deletes/{f}" for f in del_files]
+        return apply_deletes(idx, spark.read.schema(TOMBSTONE_SCHEMA).parquet(*deletes))
+    n_docs, avgdl = doc_stats(idx.doclens)
+    return replace(idx, n_docs=n_docs, avgdl=avgdl)
+
+
+def _tombstones(spark: SparkSession, docids) -> DataFrame:
+    """A delete file's frame: distinct docids of a DataFrame's ``docid``
+    column, or of an iterable of ints — deduplicated on the driver and
+    exploded from one literal array, so writing it runs one task in the
+    JVM (no shuffle, no Python worker) and leaves one file."""
+    if isinstance(docids, DataFrame):
+        return docids.select(F.col("docid").cast("long").alias("docid")).distinct()
+    ids = ", ".join(f"{d}L" for d in sorted({int(d) for d in docids}))
+    return spark.sql(f"SELECT explode(CAST(array({ids}) AS array<bigint>)) AS docid")
 
 
 def delete_docs(spark: SparkSession, index_path: str, docids) -> Snapshot:
@@ -347,10 +372,7 @@ def delete_docs(spark: SparkSession, index_path: str, docids) -> Snapshot:
         raise FileNotFoundError(
             f"delete_docs requires a snapshot-committed index at {index_path}"
         )
-    if isinstance(docids, DataFrame):
-        tomb = docids.select(F.col("docid").cast("long").alias("docid")).distinct()
-    else:
-        tomb = spark.createDataFrame([(int(d),) for d in docids], "docid long").distinct()
+    tomb = _tombstones(spark, docids)
     # unique immutable file name: never renamed, never rewritten (the
     # snapshot id it was staged for may lose a commit race; the app-id +
     # nanotime suffix keeps racing writers apart)
@@ -410,14 +432,7 @@ def upsert_docs(
         seg_id = f"upsert-{snap.snapshot_id + 1}"
     if seg_id in snap.folded or seg_id in snap.segments:
         return snap
-    if isinstance(replace_docids, DataFrame):
-        tomb = replace_docids.select(
-            F.col("docid").cast("long").alias("docid")
-        ).distinct()
-    else:
-        tomb = spark.createDataFrame(
-            [(int(d),) for d in replace_docids], "docid long"
-        ).distinct()
+    tomb = _tombstones(spark, replace_docids)
     # self-tombstone guard: one bounded job over the (small) updated frame
     clash = (
         docs.select("docid").join(tomb, "docid", "left_semi").limit(1).count()

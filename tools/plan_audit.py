@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 
@@ -94,7 +95,7 @@ def audit(sf_dir: str) -> list[dict]:
 
     # 1. BM25 top-k: term-id IN predicate must reach the parquet scan
     #    (row-group pruning); final op is TakeOrderedAndProject (bounded
-    #    heap, no global sort); df probe is a collect, not a join.
+    #    heap, no global sort); df is an in-plan window, not a join.
     p = final_plan(bm25_topk(idx, ["spark", "merge"], 10))
     check(
         "bm25_topk",
@@ -304,6 +305,51 @@ def audit(sf_dir: str) -> list[dict]:
         print(("OK  " if ok else "FAIL") + f" {name}")
     ranged.unpersist()
     unranged.unpersist()
+
+    # 11. segmented reader: 3 segments and 2 delete files (one past Spark's
+    #     InSet threshold). Tombstones are literals and df is a window in
+    #     the query plan, so BM25 adds exactly one exchange on tid (the df
+    #     window) and a keyword query none; neither plan broadcasts.
+    from mini_search_engine_spark.search import search_keyword
+    from mini_search_engine_spark.streaming import (
+        delete_docs,
+        read_segmented_index,
+        write_segment,
+    )
+
+    seg_root = tempfile.mkdtemp(prefix="plan_audit_segments_")
+    for s in range(3):
+        seg = build_index(docs.filter(F.col("docid") % 3 == s), analyzer="punct_nostem", block_span=64)
+        write_segment(seg, seg_root, str(s))
+        seg.unpersist(corpus=False)
+    delete_docs(spark, seg_root, [0, 1])
+    delete_docs(spark, seg_root, list(range(5, 500, 7)))
+    seg_idx = read_segmented_index(spark, seg_root, analyzer="punct_nostem", block_span=64)
+    for name, df, tid_exchanges, notes in (
+        ("segmented_bm25", bm25_topk(seg_idx, ["spark", "merge"], 10), 1,
+         "tombstones as literals; exactly one tid exchange: the in-plan df window"),
+        ("segmented_keyword", search_keyword(seg_idx, "spark"), 0,
+         "tombstones as literals; the unread df window is pruned"),
+    ):
+        p = final_plan(df)
+        n_tid = sum("hashpartitioning(tid" in e for e in query_exchanges(df))
+        ok = "BroadcastExchange" not in p and n_tid == tid_exchanges
+        checks.append(
+            {
+                "op": name,
+                "ok": ok,
+                "patterns": {
+                    "BroadcastExchange": {"expected": False, "present": "BroadcastExchange" in p},
+                    f"exactly {tid_exchanges} hashpartitioning(tid) Exchange": {
+                        "expected": True,
+                        "present": n_tid == tid_exchanges,
+                    },
+                },
+                "notes": notes,
+            }
+        )
+        print(("OK  " if ok else "FAIL") + f" {name}")
+    shutil.rmtree(seg_root, ignore_errors=True)
 
     spark.stop()
     return checks
