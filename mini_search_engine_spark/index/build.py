@@ -66,6 +66,11 @@ DOCLENS_SCHEMA = "docid long, dl int"
 TERMSTATS_SCHEMA = "term string, tid long, df long"
 
 
+def sql_int_list(values) -> str:
+    """A parenthesized list of BIGINT literals for SQL text: ``(1L, 2L)``."""
+    return f"({', '.join(f'{int(v)}L' for v in values)})"
+
+
 def postings_schema(compressed: bool, positional: bool, term: bool = False) -> T.StructType:
     """The postings columns in file order, as the build kernel, merge,
     champion pruning and deletes all write them: ``tid, block, n``, the
@@ -118,8 +123,8 @@ class InvertedIndex:
     # input_hint-shaped build can't pin O(corpus) blocks past retirement
     corpus_cache: DataFrame | None = None
     # driver-side per-term df memo, enabled on warm() (serving indexes are
-    # immutable): repeated query terms skip the termstats-lookup job, one
-    # fewer stage wave per repeated-term query. 0 = negative-cached absent.
+    # immutable): repeated terms skip the termstats-lookup job of the
+    # callers that take df as a literal. 0 = negative-cached absent.
     df_cache: dict | None = None
     # session temp view over warm()'s serving layout — the postings frame
     # itself, df stamped in. Only warm() sets it; every derivation that
@@ -188,10 +193,12 @@ class InvertedIndex:
         The layout is registered as a session temp view (``serving_view``)
         so a query is one ``spark.sql`` text with inline numeric
         literals. doclens and termstats are pinned too, and ``df_cache``
-        starts empty: it memoizes the termstats probe for the scorers
-        that still take df as a driver-side literal (the pruned BM25
-        gate, batch BM25, LTR features). The returned index OWNS the
-        caches and the view (release via ``.unpersist()``)."""
+        starts empty: it memoizes the termstats probe for the callers
+        that still take df as a driver-side literal: the BM25 prune gate
+        and its block bounds, and more-like-this's term choice. Every
+        scorer on a warm index, pruned tier or not, reads the stamped df
+        instead. The returned index OWNS the caches and the view (release
+        via ``.unpersist()``)."""
         import uuid
         from concurrent.futures import ThreadPoolExecutor
 
@@ -240,15 +247,15 @@ class InvertedIndex:
         ``block`` and the planner no longer matches it to the cached
         range partitioning. Any other index substitutes its tid-filtered,
         decoded postings. ``df`` has three sources: stamped by ``warm()``;
-        on complete postings (neither warm nor ``pruned``) ``sum(n) OVER
+        the ``df`` argument (tid → df from the termstats probe) as a
+        literal ``CASE`` — required on ``pruned`` tiers, whose Σ n
+        undercounts; otherwise, on complete postings, ``sum(n) OVER
         (PARTITION BY tid)`` in the plan, deletes applied — the termstats
         df with no probe job, and pruned away from templates that never
-        read it; on ``pruned`` tiers, whose Σ n undercounts, the ``df``
-        argument (tid → df from the termstats probe) as a literal
-        ``CASE``. Only numbers reach the SQL text: term ids are hashed on
-        the driver."""
+        read it. Term ids are hashed on the driver; the only strings in
+        the SQL text are literals the templates quote."""
         spark = self.postings.sparkSession
-        in_list = f"({', '.join(f'{int(t)}L' for t in tids)})"
+        in_list = sql_int_list(tids)
         if self.serving_view is not None:
             # args={}: an empty parameter map skips pyspark's conversion of
             # the default positional-args list (three Py4J round trips)
@@ -262,7 +269,10 @@ class InvertedIndex:
             # before the decode: the window's tid exchange moves codec bytes
             p = p.withColumn("df", F.expr("sum(n) OVER (PARTITION BY tid)"))
         p = replace(self, postings=p).decoded().postings
-        # pyspark binds the DataFrame to a temporary view for this call only
+        # pyspark binds the DataFrame to a temporary view for this call
+        # only, formatting the text a second time: escape the braces
+        # string literals in ``params`` may hold
+        params = {k: v.replace("{", "{{").replace("}", "}}") for k, v in params.items()}
         text = sql.format(postings="{postings}", tids=in_list, **params)
         return spark.sql(text, postings=p)
 

@@ -33,7 +33,7 @@ from dataclasses import replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mini_search_engine_spark.index.build import InvertedIndex, doc_stats
+from mini_search_engine_spark.index.build import InvertedIndex, doc_stats, sql_int_list
 
 # the schema of a delete file
 TOMBSTONE_SCHEMA = "docid long"
@@ -43,7 +43,7 @@ def _in(col: str, values: list[int]) -> str:
     """SQL text ``col IN (v, …)`` — ``false`` for no values."""
     if not values:
         return "false"
-    return f"{col} IN ({', '.join(f'{v}L' for v in values)})"
+    return f"{col} IN {sql_int_list(values)}"
 
 
 def apply_deletes(index: InvertedIndex, tombstones: DataFrame) -> InvertedIndex:
@@ -62,36 +62,40 @@ def apply_deletes(index: InvertedIndex, tombstones: DataFrame) -> InvertedIndex:
     touched_blocks = _in("block", sorted({d // index.block_span for d in ids}))
 
     # a warm index's stamped df would go stale: drop it, and its serving
-    # view below; the result takes df from the rewritten termstats.
-    # _mask[i] says docids[i] survives; it is NULL outside touched blocks.
+    # view below; the result takes df from the rewritten termstats. Every
+    # rewrite tests the INPUT docids against the literal set, once per
+    # element: an intermediate mask column would be inlined by Catalyst
+    # into each pushed-down filter and evaluated again per element.
     p = index.postings.drop("df")
-    masked = p.selectExpr(
-        "*", f"CASE WHEN {touched_blocks} THEN transform(docids, d -> NOT {_in('d', ids)}) END AS _mask"
-    )
-    touched = "array_contains(_mask, false)"
 
     def kept(arr: str) -> str:
-        return f"CASE WHEN {touched} THEN filter({arr}, (x, i) -> _mask[i]) ELSE {arr} END"
+        return f"filter({arr}, (x, i) -> NOT {_in('docids[i]', ids)})"
 
-    masked = masked.selectExpr("*", f"{kept('docids')} AS _new_docids")
+    # rewritten only in touched blocks; a row whose docs all go is dropped
     rewritten = {
-        "docids": "_new_docids",
-        "n": "size(_new_docids)",
-        "min_docid": f"CASE WHEN {touched} THEN element_at(_new_docids, 1) ELSE min_docid END",
-        "max_docid": f"CASE WHEN {touched} THEN element_at(_new_docids, -1) ELSE max_docid END",
-        "max_tf": f"CASE WHEN {touched} THEN array_max({kept('tfs')}) ELSE max_tf END",
-        "min_dl": f"CASE WHEN {touched} THEN array_min({kept('dls')}) ELSE min_dl END",
-        **{arr: kept(arr) for arr in ("tfs", "dls", "positions")},
+        "n": f"size({kept('docids')})",
+        "min_docid": f"element_at({kept('docids')}, 1)",
+        "max_docid": f"element_at({kept('docids')}, -1)",
+        "max_tf": f"array_max({kept('tfs')})",
+        "min_dl": f"array_min({kept('dls')})",
+        **{arr: kept(arr) for arr in ("docids", "tfs", "dls", "positions")},
     }
-    new_postings = masked.filter("size(_new_docids) > 0").selectExpr(
-        *[f"{rewritten.get(c, c)} AS {c}" for c in p.columns]
+    new_postings = p.filter(
+        f"NOT ({touched_blocks} AND forall(docids, d -> {_in('d', ids)}))"
+    ).selectExpr(
+        *[
+            f"CASE WHEN {touched_blocks} THEN {rewritten[c]} ELSE {c} END AS {c}"
+            if c in rewritten
+            else c
+            for c in p.columns
+        ]
     )
 
     # exact df deltas from the touched blocks only — the block filter is
     # pushed to the parquet scan, so untouched row groups are never read
     deltas = (
-        masked.filter(touched_blocks)
-        .selectExpr("tid", "size(docids) - size(_new_docids) AS _deleted")
+        p.filter(touched_blocks)
+        .selectExpr("tid", f"size(filter(docids, d -> {_in('d', ids)})) AS _deleted")
         .filter("_deleted > 0")
         .groupBy("tid")
         .agg(F.sum("_deleted").alias("_deleted"))

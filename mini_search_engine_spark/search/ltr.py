@@ -18,29 +18,32 @@ BM25 top-N:
 * ``dl``            — document length (tokens)
 * ``pagerank``      — caller-supplied graph score (e.g. search.pagerank)
 
-Scale shape: ONE postings scan filtered to the union of all queries'
-term ids (int-IN parquet pushdown), the per-(qid, tid) weight table joins
-in as ONE broadcast amortized over the whole batch (bm25_topk_batch's
-design), per-query aggregation in a single groupBy(qid, docid), top-N as
-one window pass. The pagerank join runs AFTER the top-N cut, so it moves
-queries×N rows, not the candidate set. Rank cutoffs compare scores rounded
-to 6dp (repo convention) so the exported candidate set is
-engine-reproducible.
+Scale shape: ``bm25_topk_batch``'s plan — ONE postings scan filtered to
+the union of all queries' term ids (int-IN parquet pushdown), the query
+vectors a literal in the SQL text (no weight table, no join), df from
+the index's own source (see ``search/ranking.py``); every feature is an
+aggregate of the same ``(qid, block, docid)`` group, top-N one window
+pass. The pagerank join runs AFTER the top-N cut, so it moves queries×N
+rows, not the candidate set. Rank cutoffs compare scores rounded to 6dp
+(repo convention) so the exported candidate set is engine-reproducible.
 """
 
 from __future__ import annotations
-
-from collections import Counter
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mini_search_engine_spark.index.build import InvertedIndex
-from mini_search_engine_spark.index.termid import term_id_py
 
-from .ranking import B, K1, _analyzed_with_counts, _bm25_idf, _df_map, _exploded
+from .ranking import _BATCH_FROM, _batch_query
 
 __all__ = ["ltr_features"]
+
+_LTR_SQL = """SELECT qid, docid, sum(qc * {bm25}) AS bm25,
+  sum(tf * ({n} / df) * (qc * ({n} / df))) AS tfidf_dot,
+  count(*) AS matched_terms, CAST(sum(tf) AS BIGINT) AS sum_tf,
+  CAST(max(dl) AS BIGINT) AS dl
+""" + _BATCH_FROM
 
 
 def ltr_features(
@@ -55,74 +58,20 @@ def ltr_features(
     analyzer, multiplicity kept). ``pagerank_df`` is any (docid, pagerank)
     frame; absent docids export NULL. ``topk`` keeps the per-query BM25
     top-N candidates (ties: rounded score desc, docid asc)."""
-    spark = index.postings.sparkSession
-
-    qvecs: dict[str, Counter] = {}
-    all_terms: set[str] = set()
-    for qid, kws in queries.items():
-        counts = _analyzed_with_counts(index, kws)
-        qvecs[qid] = counts
-        all_terms |= set(counts)
-    dfm = _df_map(index, sorted(all_terms)) if all_terms else {}
-    n = float(index.n_docs)
-    rows = [
-        (
-            qid,
-            term_id_py(t),
-            float(c) * _bm25_idf(index.n_docs, dfm[t]),  # BM25 query weight
-            float(c) * (n / float(dfm[t])),  # TF-IDF query weight (idf=N/df)
-            n / float(dfm[t]),  # doc-side idf multiplier
-        )
-        for qid, counts in qvecs.items()
-        for t, c in counts.items()
-        if dfm.get(t)
-    ]
-    out_cols = [
-        "qid",
-        "docid",
-        "bm25",
-        "tfidf_dot",
-        "matched_terms",
-        "sum_tf",
-        "dl",
-    ]
-    if not rows:
-        empty = spark.range(0).select(
+    feats = _batch_query(index, _LTR_SQL, queries)
+    if feats is None:
+        empty = index.postings.sparkSession.range(0).select(
             F.lit("").alias("qid"),
             F.col("id").alias("docid"),
             F.lit(0.0).alias("bm25"),
             F.lit(0.0).alias("tfidf_dot"),
-            F.lit(0).cast("long").alias("matched_terms"),
-            F.lit(0).cast("long").alias("sum_tf"),
-            F.lit(0).cast("long").alias("dl"),
+            F.col("id").alias("matched_terms"),
+            F.col("id").alias("sum_tf"),
+            F.col("id").alias("dl"),
         )
         if pagerank_df is not None:
             empty = empty.withColumn("pagerank", F.lit(0.0))
         return empty
-
-    qdf = spark.createDataFrame(
-        rows, "qid string, tid long, wb double, wt double, idfn double"
-    )
-    raw = index.postings.filter(
-        F.col("tid").isin(sorted({r[1] for r in rows}))
-    )
-    if index.compressed:
-        from dataclasses import replace as _rep
-
-        raw = _rep(index, postings=raw).decoded().postings
-    denom = F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / index.avgdl)
-    feats = (
-        _exploded(raw)
-        .join(F.broadcast(qdf), "tid")
-        .groupBy("qid", "docid")
-        .agg(
-            F.sum(F.col("wb") * (F.col("tf") * (K1 + 1.0)) / denom).alias("bm25"),
-            F.sum(F.col("tf") * F.col("idfn") * F.col("wt")).alias("tfidf_dot"),
-            F.count("*").alias("matched_terms"),
-            F.sum("tf").cast("long").alias("sum_tf"),
-            F.max("dl").cast("long").alias("dl"),
-        )
-    )
     if topk is not None:
         rw = Window.partitionBy("qid").orderBy(
             F.desc(F.round(F.col("bm25"), 6)), F.asc("docid")
@@ -132,9 +81,8 @@ def ltr_features(
             .filter(F.col("_rnk") <= topk)
             .drop("_rnk")
         )
-    if pagerank_df is not None:
-        feats = feats.join(
-            pagerank_df.select("docid", "pagerank"), "docid", "left"
-        )
-        out_cols.append("pagerank")
-    return feats.select(*out_cols)
+    if pagerank_df is None:
+        return feats
+    return feats.join(pagerank_df.select("docid", "pagerank"), "docid", "left").select(
+        *feats.columns, "pagerank"
+    )

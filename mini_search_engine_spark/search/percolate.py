@@ -189,7 +189,7 @@ class Percolator:
     def match(self, docs: DataFrame) -> DataFrame:
         if self._b_index is None:
             if len(self._qrows) < self.probe_min_queries:
-                # Cost gate (r6, same shape as bm25's prune_min_postings):
+                # Cost gate (r6, same shape as bm25's PRUNE_MIN_POSTINGS):
                 # routing choice NEVER affects the emitted rows — for an
                 # emitted (doc, query) pair the doc holds ≥ min_should of
                 # the query's terms, and any n−m+1 routed terms must

@@ -14,13 +14,20 @@ BM25 (north_star, k1=1.2 b=0.75) uses the Lucene/ATIRE idf
 ``ln(1 + (N - df + 0.5)/(df + 0.5))`` and
 ``tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl))``; doc length comes from the ``dls``
 array denormalized into the postings at build time, so the only query-time
-state is per-term df — no join against a doc-stats table. Both scorers are
-one SQL text each (``InvertedIndex.query``), reading df from one of three
-sources: on a warm index the column ``warm()`` stamped onto the postings
-(the query is one Spark job); on complete postings (a built, read or
-segmented index, deletes applied) ``sum(n) OVER (PARTITION BY tid)`` in
-the same plan; on a ``pruned`` champion tier, whose postings undercount
-df, a literal ``CASE`` from the termstats probe.
+state is per-term df — no join against a doc-stats table. That term score
+is ONE SQL text (``_BM25_IDF`` × ``_BM25_SAT``, with ``tf``/``dl`` as
+fields) which every BM25 scorer fills in and runs through
+``InvertedIndex.query``: single queries (``_BM25_SQL``); batches and LTR
+features, with the query vectors a literal ``map(tid → …)[tid]`` and rows
+grouped on ``(qid, block, docid)``; score explanations (the same rows,
+ungrouped); and the block-max upper bounds (``max_tf``/``min_dl`` filled
+in, grouped by block). TF-IDF is one SQL text too. So every scorer reads
+df from the same three sources: on a warm index the column ``warm()``
+stamped onto the postings (a single query is one Spark job); on complete
+postings (a built, read or segmented index, deletes applied) ``sum(n)
+OVER (PARTITION BY tid)`` in the same plan; on a ``pruned`` champion
+tier, whose postings undercount df, a literal ``CASE`` from the termstats
+probe. No scorer joins a weight table.
 
 Block-max pruning (``bm25_topk(prune=True)``): blocks are docid-range
 aligned ACROSS terms (build.py), so for a range r the upper bound
@@ -41,7 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mini_search_engine_spark.analysis.udfs import analyze_query
-from mini_search_engine_spark.index.build import InvertedIndex
+from mini_search_engine_spark.index.build import InvertedIndex, sql_int_list
 from mini_search_engine_spark.index.termid import term_id_py
 
 K1 = 1.2
@@ -84,21 +91,14 @@ def _df_map(index: InvertedIndex, terms: list[str]) -> dict[str, int]:
     return {t: cache[t] for t in terms if cache[t]}
 
 
-def _exploded(posts: DataFrame) -> DataFrame:
-    return posts.select(
-        "tid",
-        F.explode(F.arrays_zip("docids", "tfs", "dls")).alias("z"),
-    ).select(
-        "tid",
-        F.col("z.docids").alias("docid"),
-        F.col("z.tfs").alias("tf"),
-        F.col("z.dls").alias("dl"),
-    )
-
-
 def _sql_double(x: float) -> str:
     """A double literal for SQL text (a bare ``1.5`` parses as DECIMAL)."""
     return f"{float(x)!r}D"
+
+
+def _sql_string(s: str) -> str:
+    """A string literal for SQL text."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _tid_case(values: dict[int, float]) -> str:
@@ -154,26 +154,40 @@ def _bm25_idf(n: int, df: int) -> float:
     return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
 
-def _term_weight_expr(rows: list[tuple[int, float, float]]) -> F.Column:
-    """Per-term weight qw·idf as a chained-CASE literal over the (few)
-    query term IDS (driver-hashed — int equality in codegen), for the
-    pruned path's block upper bounds. Folding the scalars into the
-    expression avoids a broadcast-exchange build per job (measured
-    ~0.2-0.5 s of fixed latency PER JOB on this box)."""
-    chain = F.lit(0.0)
-    for tid, qw, idf in rows:
-        chain = F.when(F.col("tid") == F.lit(tid), F.lit(float(qw * idf))).otherwise(chain)
-    return chain
+# The one BM25 term score, idf × tf saturation, as SQL text over a postings
+# row: ``df`` is the row's df column (see InvertedIndex.query), ``tf`` and
+# ``dl`` are fields — a posting's tf and doc length, or a block's max_tf and
+# min_dl for the block-max upper bound.
+_BM25_IDF = "ln(1.0D + ({n} - df + 0.5D) / (df + 0.5D))"
+_BM25_SAT = "({tf} * {k1p1}) / ({tf} + {k1} * ({omb} + {b} * {dl} / {avgdl}))"
 
 
-# The one BM25 scoring expression: idf from each row's df (stamped on a warm
-# index, a probe literal otherwise), doc length from the dls array
-# denormalized into the postings, so no doc-stats join.
-_BM25_SQL = """SELECT docid, sum({qw} * ln(1.0D + ({n} - df + 0.5D) / (df + 0.5D))
-  * (tf * {k1p1}) / (tf + {k1} * ({omb} + {b} * dl / {avgdl}))) AS score
+def _bm25_term(index: InvertedIndex, tf: str = "tf", dl: str = "dl") -> dict[str, str]:
+    """The BM25 term score filled in for ``index`` → the template fields
+    ``idf``, ``sat`` and their product ``bm25``."""
+    idf = _BM25_IDF.format(n=_sql_double(index.n_docs))
+    sat = _BM25_SAT.format(
+        tf=tf,
+        dl=dl,
+        k1p1=_sql_double(K1 + 1.0),
+        k1=_sql_double(K1),
+        omb=_sql_double(1.0 - B),
+        b=_sql_double(B),
+        avgdl=_sql_double(index.avgdl),
+    )
+    return {"idf": idf, "sat": sat, "bm25": f"{idf}\n  * {sat}"}
+
+
+_BM25_SQL = """SELECT docid, sum({qw} * {bm25}) AS score
 FROM {postings} LATERAL VIEW inline(arrays_zip(docids, tfs, dls)) z AS docid, tf, dl
 WHERE tid IN {tids}{blocks}
 GROUP BY block, docid{tail}"""
+
+# block-max upper bounds: the term score at each block's (max_tf, min_dl)
+_BM25_UB_SQL = """SELECT block, sum({qw} * {bm25}) AS ub, sum(n) AS n_cand
+FROM {postings}
+WHERE tid IN {tids}
+GROUP BY block"""
 
 
 def _bm25(
@@ -190,23 +204,21 @@ def _bm25(
     if not by_tid:
         return _empty_scored(index)
     tail = "" if topk is None else f"\nORDER BY score DESC, docid LIMIT {int(topk)}"
-    in_blocks = ""
-    if blocks is not None:
-        in_blocks = f" AND block IN ({', '.join(f'{int(b)}L' for b in blocks)})"
     return index.query(
         _BM25_SQL,
         list(by_tid),
         df,
         qw=_tid_case({tid: weights[t] for tid, t in by_tid.items()}),
-        n=_sql_double(index.n_docs),
-        k1p1=_sql_double(K1 + 1.0),
-        k1=_sql_double(K1),
-        omb=_sql_double(1.0 - B),
-        b=_sql_double(B),
-        avgdl=_sql_double(index.avgdl),
-        blocks=in_blocks,
+        blocks="" if blocks is None else f" AND block IN {sql_int_list(blocks)}",
         tail=tail,
+        **_bm25_term(index),
     )
+
+
+# the two-phase pruned path's cost gates (see bm25_topk): below either
+# threshold the exact plan runs
+PRUNE_MIN_BLOCKS = 64
+PRUNE_MIN_POSTINGS = 5_000_000
 
 
 def bm25_topk(
@@ -214,12 +226,11 @@ def bm25_topk(
     keywords: list[str],
     topk: int = 10,
     prune: bool = False,
-    prune_min_blocks: int = 64,
-    prune_min_postings: int = 5_000_000,
 ) -> DataFrame:
     """BM25 top-k → (docid, score) descending, ties by ascending docid.
     On a warm index the exact path is one Spark job; ``prune=True`` adds
-    block-max pruning behind two cost gates."""
+    block-max pruning behind two cost gates (``PRUNE_MIN_POSTINGS``,
+    ``PRUNE_MIN_BLOCKS``)."""
     counts = _analyzed_with_counts(index, keywords)
     if not counts:
         return _empty_scored(index)
@@ -236,44 +247,31 @@ def bm25_topk(
     # the gate is pure driver arithmetic; at real scale common terms
     # carry df ≫ the budget and pruning stays on.
     dfm = _df_map(index, sorted(counts))
-    rows = [
-        (term_id_py(t), float(counts[t]), _bm25_idf(index.n_docs, dfm[t]))
-        for t in sorted(counts)
-        if dfm.get(t)
-    ]
-    if not rows:
+    by_tid = {term_id_py(t): t for t in sorted(counts) if dfm.get(t)}
+    if not by_tid:
         return _empty_scored(index)
     # cost-based fallback: the two-phase pruning spends 2 extra Spark jobs
     # (UB ranking + θ seeding); with only a handful of docid ranges there is
     # nothing to skip, so run the single-job exact plan. Driver-side
     # arithmetic — no extra action.
     n_blocks = (index.n_docs + index.block_span - 1) // max(index.block_span, 1)
-    if sum(dfm.get(t) or 0 for t in counts) < prune_min_postings or n_blocks < prune_min_blocks:
+    if sum(dfm.values()) < PRUNE_MIN_POSTINGS or n_blocks < PRUNE_MIN_BLOCKS:
         return _bm25(index, counts, topk)
 
     # ---- block-max pruning over docid-range-aligned blocks ----
-    # Distributed throughout: per-range upper bounds are a DataFrame agg
-    # over BLOCK-LEVEL stats (no posting arrays touched); only the top few
-    # ranges needed to seed θ are ever collected (≤ a few hundred rows,
-    # independent of corpus size). tid/block filters apply to the RAW
-    # postings, so the codec UDF runs strictly on the surviving rows.
-    raw = index.postings.filter(F.col("tid").isin([r[0] for r in rows]))
-    avgdl = index.avgdl
-    w = _term_weight_expr(rows)
-    ub_expr = (
-        w
-        * F.col("max_tf")
-        * (K1 + 1.0)
-        / (F.col("max_tf") + K1 * (1.0 - B + B * F.col("min_dl") / avgdl))
-    )
-    # NOT persisted: the UB agg touches only block-level stat columns of a
-    # term-pushdown scan (no posting arrays, no codec), so recomputing it
+    # Distributed throughout: per-range upper bounds aggregate BLOCK-LEVEL
+    # stats (the term score at max_tf/min_dl, df the probe's literal; no
+    # posting arrays touched, so no codec decode); only the top few ranges
+    # needed to seed θ are ever collected (≤ a few hundred rows,
+    # independent of corpus size). NOT persisted: recomputing the bounds
     # inside the final plan is cheaper than leaking a cached RDD per query
     # in a serving session.
-    ub_range = (
-        raw.select("tid", "block", "n", "max_tf", "min_dl")
-        .groupBy("block")
-        .agg(F.sum(ub_expr).alias("ub"), F.sum("n").alias("n_cand"))
+    ub_range = index.query(
+        _BM25_UB_SQL,
+        list(by_tid),
+        {tid: dfm[t] for tid, t in by_tid.items()},
+        qw=_tid_case({tid: counts[t] for tid, t in by_tid.items()}),
+        **_bm25_term(index, tf="max_tf", dl="min_dl"),
     )
     # Phase 1: cheapest ranges that cover ≥ topk candidates seed θ. Collect
     # a bounded prefix of ranges ordered by ub (descending).
@@ -407,10 +405,61 @@ def bm25_page(
     return scores.orderBy(F.desc("score"), F.asc("docid")).limit(page_size)
 
 
+# A batch of query vectors scores in one plan: each postings row fans out
+# to the (qid, qc) pairs of the queries holding its term (``{qvec}``, a
+# lookup in a literal tid → array map), then explodes to postings. The
+# map folds to one constant, so the plan's size does not grow with the
+# batch; a CASE over the term ids compiles one arm per term instead, and
+# ran a 256-query batch on a warm index about twice as long.
+_BATCH_FROM = """FROM {postings} LATERAL VIEW inline({qvec}) q AS qid, qc
+  LATERAL VIEW inline(arrays_zip(docids, tfs, dls)) z AS docid, tf, dl
+WHERE tid IN {tids}
+GROUP BY qid, block, docid"""
+
+_BM25_BATCH_SQL = """SELECT qid, docid, score, CAST(rank AS BIGINT) AS rank
+FROM (SELECT qid, docid, score,
+  row_number() OVER (PARTITION BY qid ORDER BY score DESC, docid) AS rank
+FROM (SELECT qid, docid, sum(qc * {bm25}) AS score
+""" + _BATCH_FROM + """))
+WHERE rank <= {topk}"""
+
+
+def _batch_query(
+    index: InvertedIndex, sql: str, queries: dict[str, list[str]], **params: str
+) -> DataFrame | None:
+    """Run ``sql``, a template over ``_BATCH_FROM``, for the batch
+    ``queries`` (qid → raw keywords, analyzed with multiplicity) with the
+    BM25 term score and ``n`` filled in; None when no query has a term
+    worth scanning."""
+    qvecs = {qid: _analyzed_with_counts(index, kws) for qid, kws in queries.items()}
+    by_tid, df = _scored_terms(index, sorted(set().union(*qvecs.values())))
+    if not by_tid:
+        return None
+    entries = ", ".join(
+        f"{tid}L, array("
+        + ", ".join(
+            f"named_struct('qid', {_sql_string(qid)}, 'qc', {_sql_double(counts[t])})"
+            for qid, counts in qvecs.items()
+            if t in counts
+        )
+        + ")"
+        for tid, t in by_tid.items()
+    )
+    return index.query(
+        sql,
+        list(by_tid),
+        df,
+        qvec=f"map({entries})[tid]",
+        n=_sql_double(index.n_docs),
+        **_bm25_term(index),
+        **params,
+    )
+
+
 def bm25_topk_batch(
     index: InvertedIndex, queries: dict[str, list[str]], topk: int = 10
 ) -> DataFrame:
-    """Exact BM25 top-k for a BATCH of queries in ONE scoring job →
+    """Exact BM25 top-k for a BATCH of queries in one plan →
     (qid, docid, score, rank), scores identical to per-query ``bm25_topk``.
 
     Serving latency on this engine is stage-WAVE-bound, not scan-bound
@@ -418,55 +467,19 @@ def bm25_topk_batch(
     round trips + N scheduling waves even when each scan is tiny. Batch
     scoring amortizes all of it: postings are filtered ONCE to the union
     of every query's term ids (one int-IN pushdown scan, each posting
-    block decoded once even when queries share terms), the per-(qid, tid)
-    weights join in as ONE small broadcast (amortized over the whole
-    batch — the chained-CASE-literal trick bm25_topk uses per query
-    cannot scale to hundreds of queries' worth of CASE arms), and the
-    per-query top-k is a single window pass partitioned by qid. The
-    offline path for relevance eval sets, query-log replays, and bulk
-    re-ranking; interactive single queries stay on ``bm25_topk``.
+    block decoded once even when queries share terms), the query vectors
+    ride in the SQL text as one literal (no weight table, no join), and
+    the per-query top-k is a single window pass partitioned by qid — on a
+    warm index two Spark jobs for the whole batch. The offline path for
+    relevance eval sets, query-log replays, and bulk re-ranking;
+    interactive single queries stay on ``bm25_topk``.
     """
-    qvecs: dict[str, Counter] = {}
-    all_terms: set[str] = set()
-    for qid, kws in queries.items():
-        counts = _analyzed_with_counts(index, kws)
-        qvecs[qid] = counts
-        all_terms |= set(counts)
-    spark = index.postings.sparkSession
-    dfm = _df_map(index, sorted(all_terms)) if all_terms else {}
-    rows = [
-        (qid, term_id_py(t), float(c) * _bm25_idf(index.n_docs, dfm[t]))
-        for qid, counts in qvecs.items()
-        for t, c in counts.items()
-        if dfm.get(t)
-    ]
-    if not rows:
-        return spark.range(0).select(
+    out = _batch_query(index, _BM25_BATCH_SQL, queries, topk=str(int(topk)))
+    if out is None:
+        return index.postings.sparkSession.range(0).select(
             F.lit("").alias("qid"),
             F.col("id").alias("docid"),
             F.lit(0.0).alias("score"),
-            F.lit(0).alias("rank"),
+            F.col("id").alias("rank"),
         )
-    qdf = spark.createDataFrame(rows, "qid string, tid long, w double")
-    raw = index.postings.filter(
-        F.col("tid").isin(sorted({tid for _, tid, _ in rows}))
-    )
-    if index.compressed:
-        from dataclasses import replace as _rep
-
-        raw = _rep(index, postings=raw).decoded().postings
-    denom = F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / index.avgdl)
-    scored = (
-        _exploded(raw)
-        .join(F.broadcast(qdf), "tid")
-        .groupBy("qid", "docid")
-        .agg(F.sum(F.col("w") * (F.col("tf") * (K1 + 1.0)) / denom).alias("score"))
-    )
-    from pyspark.sql import Window
-
-    rw = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(rw).cast("long"))
-        .filter(F.col("rank") <= topk)
-        .select("qid", "docid", "score", "rank")
-    )
+    return out

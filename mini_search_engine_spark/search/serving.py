@@ -25,9 +25,12 @@ thread makes both impossible: no caller thread ever runs a job, and
 there is exactly one job runner by construction.
 
 Per-query results are IDENTICAL to ``bm25_topk`` — ``bm25_topk_batch``
-computes the same scores from the same global stats, and the facade
-returns each query's rows in rank order (the single-query window also
-routes through the batch path, keeping one code path under test).
+fills the same BM25 term-score SQL text with the same df source, the
+batch's query vectors a literal in that text (no weight table to build or
+broadcast: on a warm index a batch is two jobs, the scoring pass and the
+per-qid top-k window), and the facade returns each query's rows in rank
+order (the single-query window also routes through the batch path,
+keeping one code path under test).
 """
 
 from __future__ import annotations

@@ -20,8 +20,10 @@ Scale shape of each:
   frame to the corpus for the collapse key, one window per key; never a
   corpus-wide window.
 * ``bm25_explain`` — per-(docid, term) contribution rows for a HANDFUL of
-  docids: the docid filter lands on the decoded postings, so the explain
-  pass reads the same blocks the query read, not the corpus.
+  docids: ``bm25_topk``'s SQL text without the GROUP BY (term names a
+  literal ``CASE tid``, df from the index's own source, no weight table
+  or join), the docid filter on the exploded postings, so the explain
+  pass reads the postings the query read, not the corpus.
 """
 
 from __future__ import annotations
@@ -29,17 +31,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mini_search_engine_spark.index.build import InvertedIndex
+from mini_search_engine_spark.index.build import InvertedIndex, sql_int_list
 from mini_search_engine_spark.search.ranking import (
     _analyzed_with_counts,
-    _bm25_idf,
-    _df_map,
-    _exploded,
-    B,
-    K1,
+    _bm25_term,
+    _scored_terms,
+    _sql_string,
+    _tid_case,
     bm25_scores,
 )
-from mini_search_engine_spark.index.termid import term_id_py
+
+_EXPLAIN_SQL = """SELECT docid, {terms} AS term, CAST(tf AS BIGINT) AS tf, df,
+  round({idf}, 6) AS idf, round({sat}, 6) AS tf_factor,
+  round({qw} * {bm25}, 6) AS contribution
+FROM {postings} LATERAL VIEW inline(arrays_zip(docids, tfs, dls)) z AS docid, tf, dl
+WHERE tid IN {tids} AND docid IN {docids}
+ORDER BY docid, term"""
 
 
 def bm25_topk_filtered(
@@ -95,53 +102,27 @@ def bm25_explain(
     (docid, term): tf, df, idf, the tf-saturation factor, and the term's
     additive contribution (contributions sum to ``bm25_topk``'s score —
     asserted in pytest). The docid filter is applied to the term-pruned
-    postings, so explaining a page of results re-reads only the blocks
-    the query touched."""
+    postings, so explaining a page of results re-reads only the postings
+    the query read."""
     counts = _analyzed_with_counts(index, keywords)
-    if not counts or not docids:
-        spark = index.postings.sparkSession
-        return spark.range(0).select(
+    by_tid, df = _scored_terms(index, sorted(counts)) if counts and docids else ({}, None)
+    if not by_tid:
+        return index.postings.sparkSession.range(0).select(
             F.col("id").alias("docid"),
             F.lit("").alias("term"),
-            F.lit(0).alias("tf"),
-            F.lit(0).alias("df"),
+            F.col("id").alias("tf"),
+            F.col("id").alias("df"),
             F.lit(0.0).alias("idf"),
             F.lit(0.0).alias("tf_factor"),
             F.lit(0.0).alias("contribution"),
         )
-    terms = sorted(counts)
-    dfm = _df_map(index, terms)
-    rows = [
-        (term_id_py(t), t, float(counts[t]), dfm[t], _bm25_idf(index.n_docs, dfm[t]))
-        for t in terms
-        if dfm.get(t)
-    ]
-    spark = index.postings.sparkSession
-    qdf = spark.createDataFrame(
-        rows, "tid long, term string, qtf double, df long, idf double"
-    )
-    raw = index.postings.filter(F.col("tid").isin([r[0] for r in rows]))
-    if index.compressed:
-        from dataclasses import replace as _rep
-
-        raw = _rep(index, postings=raw).decoded().postings
-    tf_factor = (F.col("tf") * (K1 + 1.0)) / (
-        F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / index.avgdl)
-    )
-    return (
-        _exploded(raw)
-        .filter(F.col("docid").isin(list(docids)))
-        .join(F.broadcast(qdf), "tid")
-        .select(
-            "docid",
-            "term",
-            F.col("tf").cast("long").alias("tf"),
-            "df",
-            F.round("idf", 6).alias("idf"),
-            F.round(tf_factor, 6).alias("tf_factor"),
-            F.round(F.col("qtf") * F.col("idf") * tf_factor, 6).alias(
-                "contribution"
-            ),
-        )
-        .orderBy("docid", "term")
+    names = " ".join(f"WHEN {tid}L THEN {_sql_string(t)}" for tid, t in by_tid.items())
+    return index.query(
+        _EXPLAIN_SQL,
+        list(by_tid),
+        df,
+        terms=f"CASE tid {names} END",
+        qw=_tid_case({tid: counts[t] for tid, t in by_tid.items()}),
+        docids=sql_int_list(docids),
+        **_bm25_term(index),
     )

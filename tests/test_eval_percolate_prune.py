@@ -15,6 +15,7 @@ from mini_search_engine_spark.search import (
     relevance_metrics,
     search_keyword,
 )
+from mini_search_engine_spark.search import ranking
 
 
 def _corpus(spark, texts):
@@ -275,6 +276,41 @@ def test_champion_warmed_cold_terms_use_global_df(champ_setup):
         warm.unpersist(corpus=False)
 
 
+def test_champion_batch_ltr_explain_use_global_df(champ_setup):
+    """Batch BM25, the LTR bm25 feature and score explanations on the
+    champion tier take the GLOBAL df (the termstats probe unwarmed, the
+    stamped column warmed), never the tier's capped posting counts: docs
+    that survive pruning score exactly as on the full index."""
+    from mini_search_engine_spark.search import bm25_explain, bm25_topk_batch, ltr_features
+
+    idx, tier = champ_setup
+    queries = {"qa": ["apple"], "qb": ["banana"]}
+    full = {
+        (qid, r["docid"]): r["score"]
+        for qid, kws in queries.items()
+        for r in bm25_topk(idx, kws, topk=10).collect()
+    }
+    full_ex = {
+        (r["docid"], r["term"]): r
+        for r in bm25_explain(idx, ["apple", "banana"], [0, 2]).collect()
+    }
+    warm = tier.warm()
+    try:
+        for t in (tier, warm):
+            batch = {(r["qid"], r["docid"]): r["score"] for r in bm25_topk_batch(t, queries, 10).collect()}
+            ltr = {(r["qid"], r["docid"]): r["bm25"] for r in ltr_features(t, queries).collect()}
+            assert set(batch) == set(ltr) == {("qa", 0), ("qb", 2)}
+            for key in batch:
+                assert abs(batch[key] - full[key]) < 1e-12, (key, batch, full)
+                assert abs(ltr[key] - full[key]) < 1e-12, (key, ltr, full)
+            ex = bm25_explain(t, ["apple", "banana"], [0, 2]).collect()
+            assert {(r["docid"], r["term"]) for r in ex} == {(0, "apple"), (2, "banana")}
+            for r in ex:
+                assert r.asDict() == full_ex[(r["docid"], r["term"])].asDict()
+    finally:
+        warm.unpersist(corpus=False)
+
+
 def test_doc_term_sets_matches_tokenize_docs(spark):
     """doc_term_sets (the fused within-row term-set kernel percolation
     routes through) must agree with tokenize_docs' distinct terms per doc
@@ -448,7 +484,7 @@ def test_rescore_candidate_broadcast_plan(champ_setup):
     assert "SortMergeJoin" not in plan
 
 
-def test_split_block_rows_keep_pruning_exact(spark):
+def test_split_block_rows_keep_pruning_exact(spark, monkeypatch):
     """A partition-local build writes a (term, block) whose docs span k
     input partitions as k rows. With blocks straddling three partitions,
     block-max pruned BM25 and the champion tier must return exactly the
@@ -476,7 +512,10 @@ def test_split_block_rows_keep_pruning_exact(spark):
             for r in bm25_topk(idx, terms, 10, **kw).collect()
         ]
 
-    pruned = dict(prune=True, prune_min_blocks=1, prune_min_postings=0)
+    # force the two-phase pruned path past both cost gates
+    monkeypatch.setattr(ranking, "PRUNE_MIN_BLOCKS", 1)
+    monkeypatch.setattr(ranking, "PRUNE_MIN_POSTINGS", 0)
+    pruned = dict(prune=True)
     for terms in (["spark", "merge"], ["index", "segment", "posting"], ["ident7", "block"]):
         want = top(whole, terms, **pruned)
         assert want and top(whole, terms) == want

@@ -24,6 +24,7 @@ from mini_search_engine_spark.search import (
     search_phrase,
     search_tfidf,
 )
+from mini_search_engine_spark.search import ranking
 from tools.plan_audit import build_exchanges, query_exchanges
 
 
@@ -167,18 +168,17 @@ def test_bm25_rank_identical_to_oracle(index, corpus, tiny_corpus):
             assert gs == pytest.approx(es)
 
 
-def test_bm25_pruned_matches_exact(index):
+def test_bm25_pruned_matches_exact(index, monkeypatch):
+    # PRUNE_MIN_BLOCKS = PRUNE_MIN_POSTINGS = 0 force the true two-phase
+    # block-max path even on this tiny fixture (both cost-based fallbacks
+    # would pick the exact plan here)
+    monkeypatch.setattr(ranking, "PRUNE_MIN_BLOCKS", 0)
+    monkeypatch.setattr(ranking, "PRUNE_MIN_POSTINGS", 0)
     for query in (["cat", "dog"], ["inform", "fox"], ["stem"]):
         exact = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(index, query, topk=3).collect()]
-        # prune_min_blocks=0 / prune_min_postings=0 force the true
-        # two-phase block-max path even on this tiny fixture (both
-        # cost-based fallbacks would pick the exact plan here)
         pruned = [
             (r["docid"], round(r["score"], 9))
-            for r in bm25_topk(
-                index, query, topk=3, prune=True,
-                prune_min_blocks=0, prune_min_postings=0,
-            ).collect()
+            for r in bm25_topk(index, query, topk=3, prune=True).collect()
         ]
         assert exact == pruned
 
@@ -318,37 +318,93 @@ def test_warm_unpersist_releases_every_cache(spark, warm_pair, tmp_path):
 
 
 def test_warm_df_memo(corpus):
-    """The warm index memoizes per-term dfs plain-Python for the scorers
-    that take df as a literal (batch BM25 here): it starts empty, fills on
-    use, negative-caches absent terms, answers identically to the cold
-    path, and delete_terms drops it so deleted terms cannot resolve from
-    it. bm25_topk reads the stamped df instead and leaves it untouched."""
+    """The warm index memoizes per-term dfs plain-Python for the callers
+    that take df as a literal (the BM25 prune gate here): it starts empty,
+    fills on use, negative-caches absent terms, answers identically to the
+    cold path, and delete_terms drops it so deleted terms cannot resolve
+    from it. bm25_topk and bm25_topk_batch read the stamped df instead and
+    leave it untouched."""
     from mini_search_engine_spark.index.merge import delete_terms
+
+    def top(rows):
+        return [(r["docid"], round(r["score"], 9)) for r in rows.collect()]
 
     idx = build_index(corpus, analyzer="porter", block_span=4, compress=True)
     warm = idx.warm()
     assert warm.df_cache == {}
-    cold = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(idx, ["cat", "dog"], 5).collect()]
-    w1 = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(warm, ["cat", "dog"], 5).collect()]
-    w2 = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(warm, ["cat", "dog"], 5).collect()]
-    assert w1 == w2 == cold
+    cold = top(bm25_topk(idx, ["cat", "dog"], 5))
+    assert top(bm25_topk(warm, ["cat", "dog"], 5)) == top(bm25_topk(warm, ["cat", "dog"], 5)) == cold
     assert warm.df_cache == {}
 
     def batch(i):
-        return [
-            (r["docid"], round(r["score"], 9))
-            for r in bm25_topk_batch(i, {"q": ["cat", "dog"]}, 5).orderBy("rank").collect()
-        ]
+        return top(bm25_topk_batch(i, {"q": ["cat", "dog"]}, 5).orderBy("rank"))
 
     assert batch(warm) == batch(warm) == batch(idx) == cold
+    assert warm.df_cache == {}  # batch reads the stamped df too
+
+    def pruned(i, q):
+        return top(bm25_topk(i, q, 5, prune=True))
+
+    assert pruned(warm, ["cat", "dog"]) == pruned(warm, ["cat", "dog"]) == pruned(idx, ["cat", "dog"]) == cold
     assert warm.df_cache["cat"] > 0 and warm.df_cache["dog"] > 0
-    assert bm25_topk_batch(warm, {"q": ["zzzunseen"]}, 5).collect() == []
+    assert pruned(warm, ["zzzunseen"]) == []
     assert 0 in warm.df_cache.values()  # absent term negative-cached
     deleted = delete_terms(warm, ["cat"])
     assert deleted.df_cache is None
     assert bm25_topk(deleted, ["cat"], 5).collect() == []
     warm.unpersist()
     idx.unpersist()
+
+
+def test_batch_ltr_explain_share_one_template(spark, corpus):
+    """bm25_topk_batch, ltr_features and bm25_explain fill bm25_topk's term
+    score into SQL text run by InvertedIndex.query, the query vectors a
+    literal: no weight table, so no broadcast, and on a warm index the
+    batch is at most two jobs (the scoring pass, then the per-qid top-k
+    window). Batch rows, the LTR bm25 feature and the explain contribution
+    sums equal per-query bm25_topk on the cold index, warm or not. One qid
+    carries the characters SQL and format strings treat specially."""
+    from mini_search_engine_spark.search import bm25_explain, ltr_features
+
+    queries = {
+        "q_cat": ["cat", "dog", "cat"],
+        "q_ir": ["information", "retrieval"],
+        "q'{odd}\\": ["quick", "fox"],
+        "q_none": ["zzznope"],
+    }
+    cold = build_index(corpus, analyzer="porter", block_span=4, compress=True)
+    want = {
+        qid: [(r["docid"], round(r["score"], 9)) for r in bm25_topk(cold, kws, 5).collect()]
+        for qid, kws in queries.items()
+    }
+    warm = build_index(corpus, analyzer="porter", block_span=4, compress=True).warm()
+    sc = spark.sparkContext
+    sc.setJobGroup("batch-warm", "batch-warm")
+    try:
+        bm25_topk_batch(warm, queries, 5).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("batch-warm")) <= 2
+    for idx in (warm, cold):
+        batch = bm25_topk_batch(idx, queries, 5)
+        ltr = ltr_features(idx, queries)
+        for df in (batch, ltr):
+            df.collect()  # finalize AQE
+            assert not [e for e in query_exchanges(df) if e.startswith("BroadcastExchange")]
+        got: dict[str, list] = {}
+        for r in sorted(batch.collect(), key=lambda r: (r["qid"], r["rank"])):
+            got.setdefault(r["qid"], []).append((r["docid"], round(r["score"], 9)))
+        assert got == {qid: rows for qid, rows in want.items() if rows}
+        feats = {(r["qid"], r["docid"]): r["bm25"] for r in ltr.collect()}
+        for qid, rows in want.items():
+            for docid, score in rows:
+                assert feats[(qid, docid)] == pytest.approx(score, abs=1e-9)
+            sums: dict[int, float] = {}
+            for r in bm25_explain(idx, queries[qid], [d for d, _ in rows]).collect():
+                sums[r["docid"]] = sums.get(r["docid"], 0.0) + r["contribution"]
+            assert sums == pytest.approx(dict(rows), abs=1e-5)
+    warm.unpersist()
+    cold.unpersist()
 
 
 def test_bm25_fused_cold_single_job(spark, corpus):

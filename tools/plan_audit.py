@@ -72,7 +72,7 @@ def audit(sf_dir: str) -> list[dict]:
         read_minhash_store,
         write_minhash_store,
     )
-    from mini_search_engine_spark.search import bm25_topk, bm25_topk_batch
+    from mini_search_engine_spark.search import bm25_topk, bm25_topk_batch, ltr_features
     from mini_search_engine_spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit", master="local[8]", shuffle_partitions=8)
@@ -109,19 +109,26 @@ def audit(sf_dir: str) -> list[dict]:
         "tid IN pushdown + bounded top-k heap, zero joins",
     )
 
-    # 2. batch BM25: ONE broadcast of the (qid, tid, w) weights, still no
-    #    sort-merge join, per-qid window for top-k.
-    p = final_plan(bm25_topk_batch(idx, {"qa": ["spark"], "qb": ["merge", "filter"]}, 5))
-    check(
-        "bm25_topk_batch",
-        p,
-        {
-            "PushedFilters: [": True,
-            "BroadcastHashJoin": True,
-            "SortMergeJoin": False,
-        },
-        "union-tid scan + one broadcast weight join",
-    )
+    # 2. batch BM25 and LTR features: bm25_topk's term score over one
+    #    union-tid scan, the query vectors a literal in the SQL text, so
+    #    no weight table and no join of any kind; per-qid window for top-k.
+    batch_queries = {"qa": ["spark"], "qb": ["merge", "filter"]}
+    for name, df, notes in (
+        ("bm25_topk_batch", bm25_topk_batch(idx, batch_queries, 5),
+         "union-tid scan, query vectors as a literal, no weight join"),
+        ("ltr_features", ltr_features(idx, batch_queries),
+         "bm25_topk_batch's rows, every feature an aggregate, no weight join"),
+    ):
+        check(
+            name,
+            final_plan(df),
+            {
+                "PushedFilters: [": True,
+                "BroadcastHashJoin": False,
+                "SortMergeJoin": False,
+            },
+            notes,
+        )
 
     # 3. minhash LSH pairs: intra-bucket enumeration — exactly ONE
     #    aggregate-shuffle chain, no self-join of the band table.

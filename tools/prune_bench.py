@@ -5,11 +5,11 @@ extra scheduling round-trips (UB ranking, θ seeding), each ~0.5 s of fixed
 latency on this box. A single-stage exact scan over CACHED postings at
 local[32] finishes in under a second even at 1.2M docs, so there is
 nothing for pruning to amortize — the cost-based fallback
-(`prune_min_blocks`) exists precisely for that regime. Pruning pays off in
-the serving regime it was invented for: stopword-grade query terms (every
-doc in every posting list), the index read from storage rather than a
-pre-warmed cache, and bounded per-query parallelism. This bench measures
-BOTH regimes honestly:
+(`PRUNE_MIN_BLOCKS` in `search/ranking.py`) exists precisely for that
+regime. Pruning pays off in the serving regime it was invented for:
+stopword-grade query terms (every doc in every posting list), the index
+read from storage rather than a pre-warmed cache, and bounded per-query
+parallelism. This bench measures BOTH regimes honestly:
 
 * serving: local[8], compressed index read from disk each query, 5-term
   query whose terms appear in every document, per-block tf skew
@@ -159,9 +159,10 @@ the exact scan is (posting-list length × decode work ÷ cores). Its cost
 is two extra scheduling round-trips (~0.5 s fixed each on this box), so
 on small/cached indexes or uniform corpora the exact single-stage scan
 wins; that regime is exactly what `bm25_topk`'s cost-based fallback
-(`prune_min_blocks`) and the uniform control row document. At cluster
-scale the fixed job latency is the same while the exact scan grows with
-data per core, moving the crossover further in pruning's favor.
+(`PRUNE_MIN_BLOCKS` in `search/ranking.py`) and the uniform control row
+document. At cluster scale the fixed job latency is the same while the
+exact scan grows with data per core, moving the crossover further in
+pruning's favor.
 """)
     spark.stop()
 
