@@ -71,11 +71,14 @@ def sql_int_list(values) -> str:
     return f"({', '.join(f'{int(v)}L' for v in values)})"
 
 
-def postings_schema(compressed: bool, positional: bool, term: bool = False) -> T.StructType:
+def postings_schema(
+    compressed: bool, positional: bool, term: bool = False, df: bool = False
+) -> T.StructType:
     """The postings columns in file order, as the build kernel, merge,
     champion pruning and deletes all write them: ``tid, block, n``, the
     posting arrays (or their codec bytes), the block-max stats. ``term``
-    adds the build kernel's sparse dictionary column after ``tid``."""
+    adds the build kernel's sparse dictionary column after ``tid``; ``df``
+    the global df a champion tier stamps onto its rows, last."""
     long_, int_ = T.LongType(), T.IntegerType()
 
     def col(name, typ, nullable=False):
@@ -96,6 +99,7 @@ def postings_schema(compressed: bool, positional: bool, term: bool = False) -> T
         + [col("block", long_), col("n", int_)]
         + data
         + [col("min_docid", long_), col("max_docid", long_), col("max_tf", int_), col("min_dl", int_)]
+        + [col("df", long_)] * df
     )
 
 
@@ -114,8 +118,9 @@ class InvertedIndex:
     compressed: bool = False
     # True for statically-pruned tiers (champion lists): the postings no
     # longer contain every (term, doc) pair, so per-term df must NEVER be
-    # recovered by summing posting counts — only the GLOBAL termstats /
-    # df_cache values keep the "surviving docs score identically" invariant.
+    # recovered by summing posting counts. Their rows carry the GLOBAL df
+    # instead, stamped at prune time (index/prune.py), which keeps the
+    # "surviving docs score identically" invariant.
     pruned: bool = False
     build_cache: DataFrame | None = None  # the persisted postings+term frame
     # the corpus exchange cache assign_docids attached to the input docs
@@ -123,8 +128,9 @@ class InvertedIndex:
     # input_hint-shaped build can't pin O(corpus) blocks past retirement
     corpus_cache: DataFrame | None = None
     # driver-side per-term df memo, enabled on warm() (serving indexes are
-    # immutable): repeated terms skip the termstats-lookup job of the
-    # callers that take df as a literal. 0 = negative-cached absent.
+    # immutable): repeated terms skip the termstats-lookup job of the two
+    # callers that need df on the driver, the BM25 prune gate and
+    # more-like-this. 0 = negative-cached absent.
     df_cache: dict | None = None
     # session temp view over warm()'s serving layout — the postings frame
     # itself, df stamped in. Only warm() sets it; every derivation that
@@ -193,12 +199,11 @@ class InvertedIndex:
         The layout is registered as a session temp view (``serving_view``)
         so a query is one ``spark.sql`` text with inline numeric
         literals. doclens and termstats are pinned too, and ``df_cache``
-        starts empty: it memoizes the termstats probe for the callers
-        that still take df as a driver-side literal: the BM25 prune gate
-        and its block bounds, and more-like-this's term choice. Every
-        scorer on a warm index, pruned tier or not, reads the stamped df
-        instead. The returned index OWNS the caches and the view (release
-        via ``.unpersist()``)."""
+        starts empty: it memoizes the termstats probe for the two callers
+        that need df on the driver, the BM25 prune gate and
+        more-like-this's term choice. Every scorer on a warm index, pruned
+        tier or not, reads the stamped df. The returned index OWNS the
+        caches and the view (release via ``.unpersist()``)."""
         import uuid
         from concurrent.futures import ThreadPoolExecutor
 
@@ -234,9 +239,7 @@ class InvertedIndex:
         layout.createOrReplaceTempView(view)
         return replace(idx, postings=layout, df_cache={}, serving_view=view)
 
-    def query(
-        self, sql: str, tids: list[int], df: dict[int, int] | None = None, **params: str
-    ) -> DataFrame:
+    def query(self, sql: str, tids: list[int], **params: str) -> DataFrame:
         """Run ``sql``, a SELECT over the relation ``{postings}`` that keeps
         only ``WHERE tid IN {tids}``, on this index's decoded postings;
         ``params`` fill the template's other fields.
@@ -246,14 +249,13 @@ class InvertedIndex:
         block that orders by ``(block, docid)``: a subquery re-qualifies
         ``block`` and the planner no longer matches it to the cached
         range partitioning. Any other index substitutes its tid-filtered,
-        decoded postings. ``df`` has three sources: stamped by ``warm()``;
-        the ``df`` argument (tid → df from the termstats probe) as a
-        literal ``CASE`` — required on ``pruned`` tiers, whose Σ n
-        undercounts; otherwise, on complete postings, ``sum(n) OVER
-        (PARTITION BY tid)`` in the plan, deletes applied — the termstats
-        df with no probe job, and pruned away from templates that never
-        read it. Term ids are hashed on the driver; the only strings in
-        the SQL text are literals the templates quote."""
+        decoded postings. ``df`` has two sources: a column stamped onto
+        the rows, by ``warm()`` or, on a ``pruned`` tier, at prune time;
+        otherwise, on complete postings, ``sum(n) OVER (PARTITION BY
+        tid)`` in the plan, deletes applied — the termstats df with no
+        probe job, and pruned away from templates that never read it.
+        Term ids are hashed on the driver; the only strings in the SQL
+        text are literals the templates quote."""
         spark = self.postings.sparkSession
         in_list = sql_int_list(tids)
         if self.serving_view is not None:
@@ -262,10 +264,7 @@ class InvertedIndex:
             text = sql.format(postings=self.serving_view, tids=in_list, **params)
             return spark.sql(text, args={})
         p = self.postings.filter(f"tid IN {in_list}")
-        if df is not None:
-            arms = " ".join(f"WHEN {int(t)}L THEN {int(d)}L" for t, d in df.items())
-            p = p.withColumn("df", F.expr(f"CASE tid {arms} END"))
-        else:
+        if not self.pruned:
             # before the decode: the window's tid exchange moves codec bytes
             p = p.withColumn("df", F.expr("sum(n) OVER (PARTITION BY tid)"))
         p = replace(self, postings=p).decoded().postings
@@ -852,8 +851,9 @@ def write_index(index: InvertedIndex, path: str, mode: str = "overwrite") -> Non
 
     def _w_postings():
         (
-            # a warm index's stamped df is serving state, not index data
-            index.postings.drop("df")
+            # a warm index's stamped df is serving state, not index data;
+            # a champion tier's is, since its rows cannot recount it
+            (index.postings if index.pruned else index.postings.drop("df"))
             .sortWithinPartitions("tid", "block")
             .write.mode(mode)
             .parquet(f"{path}/postings")
@@ -905,7 +905,8 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
         meta = _json.loads(raw)
     else:  # indexes written by older builds / lineage finalize
         meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
-    schema = postings_schema(meta["compressed"], meta["positional"])
+    pruned = bool(meta.get("pruned", False))
+    schema = postings_schema(meta["compressed"], meta["positional"], df=pruned)
     return InvertedIndex(
         postings=spark.read.schema(schema).parquet(f"{path}/postings"),
         doclens=spark.read.schema(DOCLENS_SCHEMA).parquet(f"{path}/doclens"),
@@ -916,7 +917,7 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
         block_span=meta["block_span"],
         positional=meta["positional"],
         compressed=meta["compressed"],
-        pruned=bool(meta.get("pruned", False)),
+        pruned=pruned,
     )
 
 

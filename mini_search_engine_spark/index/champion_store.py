@@ -7,7 +7,9 @@ refreshes INCREMENTALLY — only terms whose postings changed (the new
 segments' term set) are re-pruned against the full index; every other
 term's champion postings are carried over from the previous tier
 byte-for-byte. A 100 TB serving tier re-prunes the day's touched
-vocabulary, not the whole dictionary.
+vocabulary, not the whole dictionary. A tier's rows carry their term's
+global df on disk (``prune.prune_postings``): read back, it scores with
+no termstats probe.
 
 Refresh policy (recorded in the tier's meta):
 
@@ -125,9 +127,11 @@ def refresh_champion(
     sidecar, so this is a metadata-sized read, not a postings scan),
     re-prunes ONLY those terms against the full segmented index
     (tid-pushdown semi-join before the explode), and unions the previous
-    tier's untouched terms as-is. Global sidecars (termstats, doclens)
-    are always taken fresh from the current snapshot — pruning changes
-    which postings are scorable, never the collection statistics."""
+    tier's untouched terms as-is (their postings, so their stamped df, did
+    not change; a re-pruned term's df counts all its current postings).
+    Global sidecars (termstats, doclens) are always taken fresh from the
+    current snapshot — pruning changes which postings are scorable, never
+    the collection statistics."""
     snap = current_snapshot(spark, index_path)
     if snap is None:
         raise FileNotFoundError(f"no snapshot-committed index at {index_path}")

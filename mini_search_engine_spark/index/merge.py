@@ -160,7 +160,10 @@ def delete_terms(index: InvertedIndex, keywords: list[str]) -> InvertedIndex:
     from mini_search_engine_spark.index.termid import term_ids
 
     tids = term_ids(terms)
-    postings = index.postings.drop("df").filter(~F.col("tid").isin(tids))
+    # a pruned tier's stamped df is index data, unchanged for other terms
+    postings = (index.postings if index.pruned else index.postings.drop("df")).filter(
+        ~F.col("tid").isin(tids)
+    )
     termstats = index.termstats.filter(~F.col("tid").isin(tids))
     # drop any warm-mode df memo, stamped df and serving view: deleted
     # terms must not resolve from them

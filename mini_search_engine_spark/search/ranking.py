@@ -22,21 +22,23 @@ features, with the query vectors a literal ``map(tid → …)[tid]`` and rows
 grouped on ``(qid, block, docid)``; score explanations (the same rows,
 ungrouped); and the block-max upper bounds (``max_tf``/``min_dl`` filled
 in, grouped by block). TF-IDF is one SQL text too. So every scorer reads
-df from the same three sources: on a warm index the column ``warm()``
-stamped onto the postings (a single query is one Spark job); on complete
-postings (a built, read or segmented index, deletes applied) ``sum(n)
-OVER (PARTITION BY tid)`` in the same plan; on a ``pruned`` champion
-tier, whose postings undercount df, a literal ``CASE`` from the termstats
-probe. No scorer joins a weight table.
+df from the same two sources: a column stamped onto the postings rows —
+by ``warm()`` (a single query is one Spark job), or at prune time on a
+``pruned`` champion tier, whose rows cannot recount it; otherwise, on
+complete postings (a built, read or segmented index, deletes applied),
+``sum(n) OVER (PARTITION BY tid)`` in the same plan. Query terms are
+hashed on the driver; no scorer probes termstats or joins a weight table.
 
 Block-max pruning (``bm25_topk(prune=True)``): blocks are docid-range
 aligned ACROSS terms (build.py), so for a range r the upper bound
-``UB(r) = Σ_t ub(t, r)`` bounds every doc in r. Phase 1 exactly scores the
-highest-UB ranges covering ≥ k candidates → threshold θ = k-th best exact
-score; phase 2 exactly scores only the remaining ranges with UB ≥ θ. Both
-phases are plain DataFrame plans ending in TakeOrderedAndProject — the
-distributed generalization of the reference's bounded heap
-(``:1293-1298``) and of Block-Max WAND's skip logic.
+``UB(r) = Σ_t ub(t, r)`` bounds every doc in r. One aggregate collects
+every range's bound (at most ⌈N / block_span⌉ rows); on the driver, phase
+1 takes the highest-UB ranges covering ≥ k candidates and exactly scores
+them → threshold θ = k-th best exact score; phase 2 exactly scores only
+the remaining ranges with UB ≥ θ. Both phases are plain DataFrame plans
+ending in TakeOrderedAndProject — the distributed generalization of the
+reference's bounded heap (``:1293-1298``) and of Block-Max WAND's skip
+logic.
 """
 
 from __future__ import annotations
@@ -70,8 +72,9 @@ def _analyzed_with_counts(index: InvertedIndex, keywords: list[str]) -> Counter:
 
 
 def _df_map(index: InvertedIndex, terms: list[str]) -> dict[str, int]:
-    """term → df for the (few) analyzed query terms, for the scorers that
-    take df as a driver-side literal. On a warm index the dfs are memoized
+    """term → df for the (few) analyzed query terms, for the two callers
+    that need df on the driver: the BM25 prune gate and more-like-this's
+    term choice. On a warm index the dfs are memoized
     driver-side (``InvertedIndex.df_cache``; a warm index is immutable, so
     entries never go stale) — a repeated-term query skips this lookup job
     entirely. Absent terms are negative-cached as 0 (callers treat 0 as
@@ -106,21 +109,6 @@ def _tid_case(values: dict[int, float]) -> str:
     return f"CASE tid {arms} END"
 
 
-def _scored_terms(
-    index: InvertedIndex, terms: list[str]
-) -> tuple[dict[int, str], dict[int, int] | None]:
-    """tid → term for the analyzed query ``terms`` worth scanning, plus the
-    df literal ``InvertedIndex.query`` needs. A warm index's rows carry df
-    and complete postings yield it in the plan (``None``: no probe, and
-    absent terms simply match no rows); only a ``pruned`` tier probes
-    termstats (``_df_map``) and scans the terms found."""
-    if index.serving_view is not None or not index.pruned:
-        return {term_id_py(t): t for t in terms}, None
-    dfm = _df_map(index, terms)
-    by_tid = {term_id_py(t): t for t in terms if dfm.get(t)}
-    return by_tid, {tid: dfm[t] for tid, t in by_tid.items()}
-
-
 _TFIDF_SQL = """SELECT docid, sum(tf * ({n} / df) * ({qc} * ({n} / df)))
   / sqrt(sum(tf * ({n} / df) * (tf * ({n} / df)))) AS score
 FROM {postings} LATERAL VIEW inline(arrays_zip(docids, tfs)) z AS docid, tf
@@ -137,13 +125,12 @@ def search_tfidf(
     query weight ``q[t] = multiplicity·N/df`` a literal ``CASE`` over the
     driver-hashed term ids."""
     counts = _analyzed_with_counts(index, keywords)
-    by_tid, df = _scored_terms(index, sorted(counts))
+    by_tid = {term_id_py(t): t for t in sorted(counts)}
     if not by_tid:
         return _empty_scored(index)
     return index.query(
         _TFIDF_SQL,
         list(by_tid),
-        df,
         n=_sql_double(index.n_docs),
         qc=_tid_case({tid: counts[t] for tid, t in by_tid.items()}),
         limit="" if topk is None else f" LIMIT {int(topk)}",
@@ -200,14 +187,13 @@ def _bm25(
     ``weights`` (term → query weight): the top ``topk`` by (score DESC,
     docid ASC), or every matching doc unranked when ``topk`` is None.
     ``blocks`` restricts the scan to those docid ranges."""
-    by_tid, df = _scored_terms(index, sorted(t for t, w in weights.items() if w))
+    by_tid = {term_id_py(t): t for t in sorted(t for t, w in weights.items() if w)}
     if not by_tid:
         return _empty_scored(index)
     tail = "" if topk is None else f"\nORDER BY score DESC, docid LIMIT {int(topk)}"
     return index.query(
         _BM25_SQL,
         list(by_tid),
-        df,
         qw=_tid_case({tid: weights[t] for tid, t in by_tid.items()}),
         blocks="" if blocks is None else f" AND block IN {sql_int_list(blocks)}",
         tail=tail,
@@ -237,67 +223,60 @@ def bm25_topk(
     if not prune:
         return _bm25(index, counts, topk)
     # cost-based fallback #2 (r6, measured): the two-phase pruned path
-    # pays 3 extra sequential driver round trips (~0.3 s each on this
-    # box) before the final job; its benefit is the fraction of the
-    # query terms' postings it never decodes. The exact path's marginal
-    # cost is decode+score of Σ df(term) postings, so below a postings
-    # budget there is nothing worth skipping: sf1.0 local[32] A/B —
-    # pruned 1.35 s vs exact 0.42 s at Σ df ≈ 10⁵. The dfs are
-    # driver-side (the _df_map probe the upper bounds need anyway), so
-    # the gate is pure driver arithmetic; at real scale common terms
-    # carry df ≫ the budget and pruning stays on.
+    # pays extra sequential driver round trips (~0.3 s each at local[32])
+    # before the final job; its benefit is the fraction of the query
+    # terms' postings it never decodes. The exact path's marginal cost is
+    # decode+score of Σ df(term) postings, so below a postings budget
+    # there is nothing worth skipping: sf1.0 local[32] A/B — pruned
+    # 1.35 s vs exact 0.42 s at Σ df ≈ 10⁵. The gate's dfs come from
+    # the _df_map probe (memoized on a warm index), so past the probe the
+    # gate is pure driver arithmetic; at real scale common terms carry
+    # df ≫ the budget and pruning stays on.
     dfm = _df_map(index, sorted(counts))
     by_tid = {term_id_py(t): t for t in sorted(counts) if dfm.get(t)}
     if not by_tid:
         return _empty_scored(index)
     # cost-based fallback: the two-phase pruning spends 2 extra Spark jobs
-    # (UB ranking + θ seeding); with only a handful of docid ranges there is
-    # nothing to skip, so run the single-job exact plan. Driver-side
-    # arithmetic — no extra action.
+    # (the block bounds + θ seeding); with only a handful of docid ranges
+    # there is nothing to skip, so run the single-job exact plan.
+    # Driver-side arithmetic — no extra action.
     n_blocks = (index.n_docs + index.block_span - 1) // max(index.block_span, 1)
     if sum(dfm.values()) < PRUNE_MIN_POSTINGS or n_blocks < PRUNE_MIN_BLOCKS:
         return _bm25(index, counts, topk)
 
     # ---- block-max pruning over docid-range-aligned blocks ----
-    # Distributed throughout: per-range upper bounds aggregate BLOCK-LEVEL
-    # stats (the term score at max_tf/min_dl, df the probe's literal; no
-    # posting arrays touched, so no codec decode); only the top few ranges
-    # needed to seed θ are ever collected (≤ a few hundred rows,
-    # independent of corpus size). NOT persisted: recomputing the bounds
-    # inside the final plan is cheaper than leaking a cached RDD per query
-    # in a serving session.
-    ub_range = index.query(
-        _BM25_UB_SQL,
-        list(by_tid),
-        {tid: dfm[t] for tid, t in by_tid.items()},
-        qw=_tid_case({tid: counts[t] for tid, t in by_tid.items()}),
-        **_bm25_term(index, tf="max_tf", dl="min_dl"),
+    # One aggregate over BLOCK-LEVEL stats (the term score at max_tf/min_dl,
+    # df read as every scorer reads it; no posting arrays touched, so no
+    # codec decode) collects every range's bound, at most ⌈N / block_span⌉
+    # rows; the driver picks both phases' ranges from that one list.
+    bounds = sorted(
+        index.query(
+            _BM25_UB_SQL,
+            list(by_tid),
+            qw=_tid_case({tid: counts[t] for tid, t in by_tid.items()}),
+            **_bm25_term(index, tf="max_tf", dl="min_dl"),
+        ).collect(),
+        key=lambda r: (-r["ub"], r["block"]),
     )
-    # Phase 1: cheapest ranges that cover ≥ topk candidates seed θ. Collect
-    # a bounded prefix of ranges ordered by ub (descending).
-    prefix = ub_range.orderBy(F.desc("ub"), F.asc("block")).limit(
-        max(64, topk)
-    ).collect()
-    if not prefix:
-        return _empty_scored(index)
+    # Phase 1: the highest-UB ranges that cover ≥ topk candidates seed θ.
     phase1: list[int] = []
     cand = 0
-    for r in prefix:
+    for r in bounds:
         phase1.append(r["block"])
         cand += r["n_cand"]
         if cand >= max(topk, 1):
             break
+    if not phase1:
+        return _empty_scored(index)
     top1 = _bm25(index, counts, topk, blocks=phase1).collect()
     theta = top1[-1]["score"] if len(top1) >= topk else float("-inf")
 
-    # Phase 2: exact-score only surviving ranges (ub ≥ θ), pushed as an
+    # Phase 2: exact-score only the other ranges with ub ≥ θ, pushed as an
     # InSet predicate. When more than the cap survive, pruning is not
     # selective (e.g. uniform scores) and the exact plan over every range
     # costs no more.
-    surv = ub_range.filter((F.col("ub") >= theta) & ~F.col("block").isin(phase1))
-    cap = 8192
-    surv_ids = [r["block"] for r in surv.select("block").limit(cap + 1).collect()]
-    if len(surv_ids) > cap:
+    surv_ids = [r["block"] for r in bounds[len(phase1):] if r["ub"] >= theta]
+    if len(surv_ids) > 8192:
         return _bm25(index, counts, topk)
     seed = index.postings.sparkSession.createDataFrame(
         [(r["docid"], r["score"]) for r in top1], "docid long, score double"
@@ -432,7 +411,7 @@ def _batch_query(
     BM25 term score and ``n`` filled in; None when no query has a term
     worth scanning."""
     qvecs = {qid: _analyzed_with_counts(index, kws) for qid, kws in queries.items()}
-    by_tid, df = _scored_terms(index, sorted(set().union(*qvecs.values())))
+    by_tid = {term_id_py(t): t for t in sorted(set().union(*qvecs.values()))}
     if not by_tid:
         return None
     entries = ", ".join(
@@ -448,7 +427,6 @@ def _batch_query(
     return index.query(
         sql,
         list(by_tid),
-        df,
         qvec=f"map({entries})[tid]",
         n=_sql_double(index.n_docs),
         **_bm25_term(index),

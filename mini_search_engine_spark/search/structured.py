@@ -32,10 +32,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mini_search_engine_spark.index.build import InvertedIndex, sql_int_list
+from mini_search_engine_spark.index.termid import term_id_py
 from mini_search_engine_spark.search.ranking import (
     _analyzed_with_counts,
     _bm25_term,
-    _scored_terms,
     _sql_string,
     _tid_case,
     bm25_scores,
@@ -105,7 +105,7 @@ def bm25_explain(
     postings, so explaining a page of results re-reads only the postings
     the query read."""
     counts = _analyzed_with_counts(index, keywords)
-    by_tid, df = _scored_terms(index, sorted(counts)) if counts and docids else ({}, None)
+    by_tid = {term_id_py(t): t for t in sorted(counts)} if docids else {}
     if not by_tid:
         return index.postings.sparkSession.range(0).select(
             F.col("id").alias("docid"),
@@ -120,7 +120,6 @@ def bm25_explain(
     return index.query(
         _EXPLAIN_SQL,
         list(by_tid),
-        df,
         terms=f"CASE tid {names} END",
         qw=_tid_case({tid: counts[t] for tid, t in by_tid.items()}),
         docids=sql_int_list(docids),

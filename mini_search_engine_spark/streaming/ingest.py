@@ -155,10 +155,7 @@ def write_segment(idx: InvertedIndex, index_path: str, seg_id: str) -> bool:
     # capture the pre-snapshot bootstrap listing BEFORE writing this
     # segment's own data dirs, so the new seg=<id> is not double-counted
     prev_segs = snap.segments if snap else _legacy_dir_list(spark, index_path)
-    base = f"{index_path}/segments/seg={seg_id}"
-    idx.postings.write.mode("overwrite").parquet(f"{base}/postings")
-    idx.doclens.write.mode("overwrite").parquet(f"{base}/doclens")
-    idx.termstats.write.mode("overwrite").parquet(f"{base}/termstats")
+    _write_segment_files(idx, index_path, seg_id)
     commit_snapshot(
         spark,
         index_path,
@@ -168,6 +165,24 @@ def write_segment(idx: InvertedIndex, index_path: str, seg_id: str) -> bool:
         base=snap,
     )
     return True
+
+
+def _write_segment_files(idx: InvertedIndex, index_path: str, seg_id: str) -> None:
+    """Write a segment's postings, doclens and termstats, in that order,
+    under ``segments/seg=<seg_id>``; the caller commits it."""
+    base = f"{index_path}/segments/seg={seg_id}"
+    for part in ("postings", "doclens", "termstats"):
+        getattr(idx, part).write.mode("overwrite").parquet(f"{base}/{part}")
+
+
+def _write_delete_file(spark: SparkSession, index_path: str, snap: Snapshot, tomb: DataFrame) -> str:
+    """Write ``tomb`` as a delete file for the snapshot after ``snap`` →
+    its name, for the caller to commit. Unique and immutable: never
+    renamed, never rewritten (the snapshot id it was staged for may lose
+    a commit race; the app-id + nanotime suffix keeps racers apart)."""
+    name = f"del-{snap.snapshot_id + 1}-{spark.sparkContext.applicationId}-{time.monotonic_ns()}"
+    tomb.write.mode("error").parquet(f"{index_path}/deletes/{name}")
+    return name
 
 
 def _legacy_dir_list(spark: SparkSession, index_path: str) -> list[str]:
@@ -255,10 +270,7 @@ def maybe_compact(
     )
     next_id = (snap.snapshot_id + 1) if snap else 0
     new_seg = f"{COMPACT_PREFIX}{next_id}"
-    base = f"{index_path}/segments/seg={new_seg}"
-    merged.postings.write.mode("overwrite").parquet(f"{base}/postings")
-    merged.doclens.write.mode("overwrite").parquet(f"{base}/doclens")
-    merged.termstats.write.mode("overwrite").parquet(f"{base}/termstats")
+    _write_segment_files(merged, index_path, new_seg)
     # batch ids folded THIS round = every live non-compact segment; compact
     # segments are not batch ids (no stream ever replays them)
     folded = {s for s in seg_ids if not s.startswith(COMPACT_PREFIX)} | (
@@ -372,12 +384,7 @@ def delete_docs(spark: SparkSession, index_path: str, docids) -> Snapshot:
         raise FileNotFoundError(
             f"delete_docs requires a snapshot-committed index at {index_path}"
         )
-    tomb = _tombstones(spark, docids)
-    # unique immutable file name: never renamed, never rewritten (the
-    # snapshot id it was staged for may lose a commit race; the app-id +
-    # nanotime suffix keeps racing writers apart)
-    name = f"del-{snap.snapshot_id + 1}-{spark.sparkContext.applicationId}-{time.monotonic_ns()}"
-    tomb.write.mode("error").parquet(f"{index_path}/deletes/{name}")
+    name = _write_delete_file(spark, index_path, snap, _tombstones(spark, docids))
     return commit_snapshot(
         spark,
         index_path,
@@ -445,18 +452,10 @@ def upsert_docs(
     idx = build_index(
         docs, analyzer=analyzer, positional=positional, block_span=block_span
     )
-    base = f"{index_path}/segments/seg={seg_id}"
-    idx.postings.write.mode("overwrite").parquet(f"{base}/postings")
-    idx.doclens.write.mode("overwrite").parquet(f"{base}/doclens")
-    idx.termstats.write.mode("overwrite").parquet(f"{base}/termstats")
+    _write_segment_files(idx, index_path, seg_id)
     deletes = list(snap.deletes)
     if tomb.limit(1).count():
-        name = (
-            f"del-{snap.snapshot_id + 1}-"
-            f"{spark.sparkContext.applicationId}-{time.monotonic_ns()}"
-        )
-        tomb.write.mode("error").parquet(f"{index_path}/deletes/{name}")
-        deletes.append(name)
+        deletes.append(_write_delete_file(spark, index_path, snap, tomb))
     return commit_snapshot(
         spark,
         index_path,

@@ -348,8 +348,8 @@ def test_declared_schemas_match_parquet(spark, tmp_path, tiny_corpus):
             (f.name, f.dataType.simpleString()) for f in inferred
         ], path
 
-    def same_index(path, compressed, positional):
-        same(f"{path}/postings", postings_schema(compressed, positional))
+    def same_index(path, compressed, positional, pruned=False):
+        same(f"{path}/postings", postings_schema(compressed, positional, df=pruned))
         same(f"{path}/doclens", DOCLENS_SCHEMA)
         same(f"{path}/termstats", TERMSTATS_SCHEMA)
 
@@ -374,7 +374,7 @@ def test_declared_schemas_match_parquet(spark, tmp_path, tiny_corpus):
     assert maybe_compact(spark, idxp, threshold=2) is True
     same_index(f"{idxp}/segments/seg={current_snapshot(spark, idxp).segments[0]}", False, False)
     refresh_champion(spark, idxp, n_per_term=4)
-    same_index(f"{idxp}/champion/tier-{current_champion_id(spark, idxp)}", False, False)
+    same_index(f"{idxp}/champion/tier-{current_champion_id(spark, idxp)}", False, False, pruned=True)
 
     lineage = str(tmp_path / "lineage")
     resumable_build(docs, lineage, n_parts=2, block_span=4, compress=True, positional=True)

@@ -7,7 +7,7 @@ import math
 import pytest
 
 from mini_search_engine_spark.corpus import load_corpus
-from mini_search_engine_spark.index.build import build_index, index_diff
+from mini_search_engine_spark.index.build import build_index, index_diff, read_index, write_index
 from mini_search_engine_spark.index.prune import champion_index
 from mini_search_engine_spark.search import (
     bm25_topk,
@@ -143,8 +143,9 @@ def test_champion_index_single_exchange(champ_setup):
     partitioning: hash-partitioning on tid satisfies the (tid, block)
     grouping, so the TRANSFORM adds exactly one shuffle over whatever the
     source postings plan already contains (here the un-materialized build
-    plan), and the per-term cap runs as WindowGroupLimit (partial rank
-    pushdown before the exchange). Fresh index: executed DataFrames report
+    plan): the df window over the posting rows and the rank window over
+    the exploded postings share it, and the per-term cap runs as
+    WindowGroupLimit. Fresh index: executed DataFrames report
     AQE-final plan strings whose Exchange counts aren't comparable."""
     spark = champ_setup[0].postings.sparkSession
     idx = build_index(
@@ -255,32 +256,38 @@ def test_significant_terms_hand(spark):
     assert empty.count() == 0 and empty.columns == ["term", "fg_df", "bg_df", "score"]
 
 
-def test_champion_warmed_cold_terms_use_global_df(champ_setup):
+def test_champion_warmed_cold_terms_use_global_df(champ_setup, tmp_path):
     """warm() gives the champion tier a df memo (df_cache={}), making every
-    first-seen term 'cold'. The fused-cold path recovers df by summing
-    posting counts — on a PRUNED tier that is the capped df and would
-    inflate idf (ADVICE r4). Pruned indexes must route to the global
-    termstats probe, so warmed-champion scores equal full-index scores on
-    first ask AND on repeat (the async memo must not change answers)."""
+    first-seen term 'cold'. Summing posting counts on a PRUNED tier gives
+    the capped df and would inflate idf (ADVICE r4). Pruned tiers score
+    with the global df stamped onto their rows, so warmed-champion scores
+    equal full-index scores on first ask AND on repeat — also for the
+    tier read back from disk, warmed or not."""
     idx, tier = champ_setup
     assert tier.pruned is True
-    warm = tier.warm()
+    write_index(tier, str(tmp_path / "tier"))
+    back = read_index(idx.postings.sparkSession, str(tmp_path / "tier"))
+    assert back.pruned is True
+    warm, warm_back = tier.warm(), back.warm()
     try:
         full = {r["docid"]: r["score"] for r in bm25_topk(idx, ["apple"], topk=10).collect()}
-        first = {r["docid"]: r["score"] for r in bm25_topk(warm, ["apple"], topk=10).collect()}
-        again = {r["docid"]: r["score"] for r in bm25_topk(warm, ["apple"], topk=10).collect()}
-        assert set(first) == {0} and set(again) == {0}
-        assert abs(first[0] - full[0]) < 1e-12, (first, full)
-        assert abs(again[0] - full[0]) < 1e-12, (again, full)
+        for t in (warm, back, warm_back):
+            first = {r["docid"]: r["score"] for r in bm25_topk(t, ["apple"], topk=10).collect()}
+            again = {r["docid"]: r["score"] for r in bm25_topk(t, ["apple"], topk=10).collect()}
+            assert set(first) == {0} and set(again) == {0}
+            assert abs(first[0] - full[0]) < 1e-12, (first, full)
+            assert abs(again[0] - full[0]) < 1e-12, (again, full)
     finally:
         warm.unpersist(corpus=False)
+        warm_back.unpersist(corpus=False)
 
 
-def test_champion_batch_ltr_explain_use_global_df(champ_setup):
+def test_champion_batch_ltr_explain_use_global_df(champ_setup, tmp_path):
     """Batch BM25, the LTR bm25 feature and score explanations on the
-    champion tier take the GLOBAL df (the termstats probe unwarmed, the
-    stamped column warmed), never the tier's capped posting counts: docs
-    that survive pruning score exactly as on the full index."""
+    champion tier take the GLOBAL df (stamped at prune time unwarmed, by
+    warm() warmed), never the tier's capped posting counts: docs that
+    survive pruning score exactly as on the full index, also on the tier
+    read back from disk, unwarmed and warmed."""
     from mini_search_engine_spark.search import bm25_explain, bm25_topk_batch, ltr_features
 
     idx, tier = champ_setup
@@ -294,9 +301,11 @@ def test_champion_batch_ltr_explain_use_global_df(champ_setup):
         (r["docid"], r["term"]): r
         for r in bm25_explain(idx, ["apple", "banana"], [0, 2]).collect()
     }
-    warm = tier.warm()
+    write_index(tier, str(tmp_path / "tier"))
+    back = read_index(idx.postings.sparkSession, str(tmp_path / "tier"))
+    warm, warm_back = tier.warm(), back.warm()
     try:
-        for t in (tier, warm):
+        for t in (tier, warm, back, warm_back):
             batch = {(r["qid"], r["docid"]): r["score"] for r in bm25_topk_batch(t, queries, 10).collect()}
             ltr = {(r["qid"], r["docid"]): r["bm25"] for r in ltr_features(t, queries).collect()}
             assert set(batch) == set(ltr) == {("qa", 0), ("qb", 2)}
@@ -309,6 +318,7 @@ def test_champion_batch_ltr_explain_use_global_df(champ_setup):
                 assert r.asDict() == full_ex[(r["docid"], r["term"])].asDict()
     finally:
         warm.unpersist(corpus=False)
+        warm_back.unpersist(corpus=False)
 
 
 def test_doc_term_sets_matches_tokenize_docs(spark):

@@ -168,19 +168,35 @@ def test_bm25_rank_identical_to_oracle(index, corpus, tiny_corpus):
             assert gs == pytest.approx(es)
 
 
-def test_bm25_pruned_matches_exact(index, monkeypatch):
+# Spark jobs per forced-pruned query, on the complete index and on a lazy
+# champion tier alike: the gate's termstats probe, then the block-bound
+# aggregate, phase 1 and the final plan, each shuffle stage its own job
+# under AQE. A tier scoring with its stamped df probes nothing more.
+PRUNED_JOBS = 11
+
+
+def test_bm25_pruned_matches_exact(spark, index, monkeypatch):
+    """The two-phase block-max path returns the exact rows, on the
+    complete index and on a champion tier (df stamped on its rows), in a
+    fixed number of Spark jobs."""
+    from test_deletes import _in_job_group
+
+    from mini_search_engine_spark.index.prune import champion_index
+
     # PRUNE_MIN_BLOCKS = PRUNE_MIN_POSTINGS = 0 force the true two-phase
     # block-max path even on this tiny fixture (both cost-based fallbacks
     # would pick the exact plan here)
     monkeypatch.setattr(ranking, "PRUNE_MIN_BLOCKS", 0)
     monkeypatch.setattr(ranking, "PRUNE_MIN_POSTINGS", 0)
-    for query in (["cat", "dog"], ["inform", "fox"], ["stem"]):
-        exact = [(r["docid"], round(r["score"], 9)) for r in bm25_topk(index, query, topk=3).collect()]
-        pruned = [
-            (r["docid"], round(r["score"], 9))
-            for r in bm25_topk(index, query, topk=3, prune=True).collect()
-        ]
-        assert exact == pruned
+    tier = champion_index(index, n_per_term=2)
+    for name, idx in (("index", index), ("tier", tier)):
+        for query in (["cat", "dog"], ["inform", "fox"], ["stem"]):
+            exact = _rows(bm25_topk(idx, query, topk=3))
+            pruned, jobs = _in_job_group(
+                spark, f"pruned-{name}-{query}", lambda: _rows(bm25_topk(idx, query, topk=3, prune=True))
+            )
+            assert exact == pruned, (name, query)
+            assert jobs <= PRUNED_JOBS, (name, query, jobs)
 
 
 def test_search_near_proximity(spark):

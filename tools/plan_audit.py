@@ -240,6 +240,31 @@ def audit(sf_dir: str) -> list[dict]:
         "bounded candidate broadcast; rescore scan reads query-term postings only",
     )
 
+    # 8b. a champion tier served from disk, unwarmed: BM25 reads the global
+    #     df stamped onto the tier's rows, so its plan scans no termstats
+    #     and has no exchange on tid for an in-plan df window.
+    from mini_search_engine_spark.index.build import read_index, write_index
+
+    tier_root = tempfile.mkdtemp(prefix="plan_audit_tier_")
+    write_index(tier, tier_root)
+    df = bm25_topk(read_index(spark, tier_root), ["spark", "merge"], 10)
+    p = final_plan(df)
+    n_tid = sum("hashpartitioning(tid" in e for e in query_exchanges(df))
+    ok = "termstats" not in p and n_tid == 0
+    checks.append(
+        {
+            "op": "champion_bm25",
+            "ok": ok,
+            "patterns": {
+                "termstats scan": {"expected": False, "present": "termstats" in p},
+                "hashpartitioning(tid) Exchange": {"expected": False, "present": n_tid > 0},
+            },
+            "notes": "df read from the tier's stamped column: no probe, no df window",
+        }
+    )
+    print(("OK  " if ok else "FAIL") + " champion_bm25")
+    shutil.rmtree(tier_root, ignore_errors=True)
+
     # 9. warm serving: warm()'s block-range layout carries the partitioning
     #    every query kind needs — groups and order on (block, docid) — so
     #    no query adds an exchange above the cached relation (one job each).

@@ -1,8 +1,9 @@
 """Block-max pruning A/B: exact vs pruned BM25 top-10.
 
 Where pruning can win — and where it cannot: the pruned plan spends two
-extra scheduling round-trips (UB ranking, θ seeding), each ~0.5 s of fixed
-latency on this box. A single-stage exact scan over CACHED postings at
+extra scheduling round-trips before its final job (one collect of every
+block's upper bound, then phase 1's θ seed), each ~0.5 s of fixed
+latency at local[8]. A single-stage exact scan over CACHED postings at
 local[32] finishes in under a second even at 1.2M docs, so there is
 nothing for pruning to amortize — the cost-based fallback
 (`PRUNE_MIN_BLOCKS` in `search/ranking.py`) exists precisely for that
@@ -156,7 +157,8 @@ Reading: pruning's win scales with (a) score skew across docid ranges —
 phase 1 exactly scores the hot blocks, θ lands above every cold block's
 upper bound, and phase 2 decodes almost nothing — and (b) how expensive
 the exact scan is (posting-list length × decode work ÷ cores). Its cost
-is two extra scheduling round-trips (~0.5 s fixed each on this box), so
+is two extra scheduling round-trips (the block bounds, collected once,
+and phase 1's θ seed; ~0.5 s fixed each at local[8]), so
 on small/cached indexes or uniform corpora the exact single-stage scan
 wins; that regime is exactly what `bm25_topk`'s cost-based fallback
 (`PRUNE_MIN_BLOCKS` in `search/ranking.py`) and the uniform control row
